@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: executes every declared query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
   *
@@ -13,37 +11,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep the pushed In(term,…) probe intact for >10-term queries — same
-      // serving-session posture as Cli.session() (see the comment there)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", Cli.ServingInFilterThreshold)
-      // Size the generated-class cache to the workload (round 22). The
-      // default 100 entries hold ~20 of this engine's 157 query shapes
-      // (~5 codegen units each), so a full bench pass evicts EVERYTHING it
-      // compiled — including the warm pass below, whose entire point is to
-      // pre-pay codegen, and every query's own classes between its timed
-      // passes: each pass re-planned AND re-compiled every stage
-      // (measured: q_percentile_median 2.1 s/run interleaved vs 1.3 s with
-      // the cache sized to the working set). Classes, never results, are
-      // cached — the same cache Spark always uses, sized to an engine that
-      // runs 157 distinct operators instead of its 100-entry default.
-      // Workload-dependent, not scale- or core-count-dependent; a few tens
-      // of MB of metaspace. Env-overridable for A/Bs.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
     // ERROR, not WARN: the consumer of our stdout keeps only a ~2KB tail,
     // and benign per-query WARNs (e.g. WindowExec on the ≤2k-row fused
     // candidate frames) flood that window and push the summary JSON line
     // out of it (r07/r08: `parsed: null` in the driver artifact)
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftStrategies.install(spark)
+    val spark = GraftSession.create(logLevel = "ERROR")
 
     // JVM/codegen warmup: one full pass of EVERY query at the smallest scale
     // factor, so each measured plan has already paid its one-time

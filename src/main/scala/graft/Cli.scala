@@ -108,48 +108,22 @@ object Cli {
     else args.drop(i + 1).takeWhile(!_.startsWith("--")).toSeq
   }
   private def flag(args: Array[String], name: String): Boolean = args.contains(name)
+  /** `--top-k`, default 5, within [[graft.serve.McpServer.checkTopK]]'s range. */
+  private def topKArg(args: Array[String]): Int =
+    graft.serve.McpServer.checkTopK(arg(args, "--top-k").map(_.toLong).getOrElse(5L))
 
   /** Serving-session value of `spark.sql.parquet.pushdown.inFilterThreshold`
-    * — every engine session that runs the FTS probe (CLI, Bench, the probe
-    * tools) raises the default 10 to this, so a >10-distinct-term query
-    * keeps its pushed In(term,…) row-group pruning (SessionConfSpec pins
-    * both sides of the cliff). */
+    * — [[GraftSession]] raises the default 10 to this, so a
+    * >10-distinct-term query keeps its pushed In(term,…) row-group pruning
+    * instead of a min/max range spanning the alphabet between its terms
+    * (SessionConfSpec pins both sides of the cliff). */
   val ServingInFilterThreshold = "1000"
 
   /** Session parallelism: `--workers N` (the reference's `-w`,
     * `src/cli.py:52-59` — its ProcessPoolExecutor width maps to local
-    * executor threads here) > `SPARK_GRAFT_CPUS` > all cores. Also sets
-    * `spark.sql.shuffle.partitions` so shuffle width follows. */
-  private def session(workers: Option[Int] = None): SparkSession = {
-    workers.foreach(w => require(w >= 1, s"--workers must be >= 1, got $w"))
-    val cpus = workers.map(_.toString).getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString))
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the FTS probe's row-group pruning rides a pushed In(term,…) parquet
-      // filter; past this threshold Spark silently degrades the pushed In to
-      // a min/max RANGE filter, which on a term-sorted postings file spans
-      // the whole alphabet between the query's terms — a >10-distinct-term
-      // natural-language query would quietly lose the index-probe shape.
-      // 1000 keeps the full In list for any realistic query width (pinned in
-      // SessionConfSpec; posture documented in PLANS.md).
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", Cli.ServingInFilterThreshold)
-      // generated-class cache sized to the engine's operator count — the
-      // 100-entry default thrashes across this many distinct query shapes
-      // and every request re-compiles its stages (see Bench for the
-      // measurement); classes only, never results
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+    * executor threads here), resolved by [[GraftSession.cpus]]. */
+  private def session(a: Array[String]): SparkSession =
+    GraftSession.create(arg(a, "--workers").map(_.toInt))
 
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("index")   => indexCmd(args.tail)
@@ -194,7 +168,7 @@ object Cli {
     val minCount = arg(a, "--min-count").map(_.toLong).getOrElse(5L)
     val top = arg(a, "--top").map(_.toInt).getOrElse(20)
     val termFilter = arg(a, "--term")
-    val spark = session(arg(a, "--workers").map(_.toInt))
+    val spark = session(a)
     val index = IndexData.load(spark, db)
     // Some(frame) when the no-sidecar fallback persisted a derived frame
     // that must be unpersisted after the collect — spark.stop() would free
@@ -248,7 +222,7 @@ object Cli {
     // `compact --if-pending 4` unconditionally; below threshold it is a
     // cheap no-op that leaves the artifact untouched.
     val ifPending = arg(a, "--if-pending").map(_.toInt)
-    val spark = session(arg(a, "--workers").map(_.toInt))
+    val spark = session(a)
     val before = IndexData.segments(spark, db).size
     compactSkipNote(before, ifPending).foreach { note =>
       println(note)
@@ -291,7 +265,7 @@ object Cli {
     * against a live artifact — nothing is written. */
   private def statsCmd(a: Array[String]): Unit = {
     val db = arg(a, "--db").getOrElse(sys.error("--db required"))
-    val spark = session(arg(a, "--workers").map(_.toInt))
+    val spark = session(a)
     val index = IndexData.load(spark, db)
     val st = index.stats.collect().head
     val vocab = index.termdf.count()
@@ -356,7 +330,7 @@ object Cli {
       // tokenization so byte-distinct encodings of the same grapheme can't
       // evade the dedup/boilerplate hashes
       normalize = arg(a, "--normalize").map(_.toUpperCase))
-    val spark = session(arg(a, "--workers").map(_.toInt))
+    val spark = session(a)
     // `--format parquet|jsonl|csv|tsv` (default: by extension) — JSONL/CSV
     // corpora read through DocSources with pinned schemas (no inference scan)
     val docs = graft.sources.DocSources.read(spark, in, arg(a, "--format"),
@@ -464,7 +438,7 @@ object Cli {
       case Some(f) => graft.analyze.NormalizingAnalyzer(f.toUpperCase, baseAnalyzer)
       case None    => baseAnalyzer
     }
-    val spark = session(arg(a, "--workers").map(_.toInt))
+    val spark = session(a)
     val opts = IndexJob.Options(
       chunkSize = arg(a, "--chunk-size").map(_.toInt).getOrElse(512),
       overlap = arg(a, "--overlap").map(_.toInt).getOrElse(50),
@@ -928,14 +902,9 @@ object Cli {
       resolveNear(query, nearRaw, nearWindow, analyzer.tokenize)
     // the serving surface (interactive loop, one-shot search, MCP) runs the
     // low-latency ServeSearch formulation — bit-identical to the DataFrame
-    // DAG path (ServeSearchSpec) at roughly half the per-request latency
-    // (ServeProbe). GRAFT_SEARCH_ENGINE=dag is the escape hatch back to the
-    // single-DAG path for plan debugging.
-    val engine: (IndexData, String, graft.analyze.Analyzer, Option[graft.embed.Embedder],
-        Option[graft.rerank.Reranker], HybridSearch.Options) => org.apache.spark.sql.DataFrame =
-      if (sys.env.get("GRAFT_SEARCH_ENGINE").contains("dag")) HybridSearch.search
-      else graft.search.ServeSearch.search
-    val res = engine(index, bm25Query, analyzer,
+    // DAG path HybridSearch.search (ServeSearchSpec) at roughly half the
+    // per-request latency
+    val res = graft.search.ServeSearch.search(index, bm25Query, analyzer,
       Some(embedderFor(index, db)),
       // the rerank leg must score in the SAME token space as the index
       // (bigram index + unigram rerank would resurrect single-char overlap)
@@ -1155,7 +1124,7 @@ object Cli {
 
   private def searchCmd(a: Array[String]): Unit = {
     val db = arg(a, "--db").getOrElse(sys.error("--db required"))
-    val k = arg(a, "--top-k").map(_.toInt).getOrElse(5)
+    val k = topKArg(a)
     val rerank = !flag(a, "--no-rerank")
     val removeP = arg(a, "--remove-path-prefix")
     val addP = arg(a, "--add-path-prefix").orElse(defaultAddPrefix(db))
@@ -1186,7 +1155,7 @@ object Cli {
     val snippets = flag(a, "--snippets")
     thresholdWarning(threshold, fusion, k).foreach(System.err.println)
     shortlistWarning(ann, k).foreach(System.err.println)
-    val spark = session(arg(a, "--workers").map(_.toInt))
+    val spark = session(a)
     arg(a, "--queries") match {
       case Some(file) =>
         // bulk evaluation: one composed job wave for the whole query file
@@ -1348,16 +1317,24 @@ object Cli {
     servingLoop(() => (index, ann), db, lines, out, k, rerank, removeP, addP,
       fusion, threshold, phrase, phraseRank, nearRaw, nearWindow, snippets)
 
-  /** Minimal JSON-line request parser for `{"query": "...", "top_k": N}` —
-    * the legacy pre-MCP protocol, kept under `--protocol jsonl`. */
-  private val QueryRe = """"query"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-  private val TopKRe = """"top_k"\s*:\s*(\d+)""".r
+  /** The `--protocol jsonl` session body: one `{"query": "...", "top_k": N}`
+    * request per line ([[graft.serve.McpServer.parseJsonlRequest]]), one
+    * answer line each; a malformed request or a failed search answers
+    * `{"error": ...}`. Blank lines skip. */
+  private[graft] def jsonlLoop(lines: Iterator[String], out: java.io.PrintStream,
+      defaultK: Int, answer: (String, Int) => String): Unit =
+    lines.foreach { line =>
+      if (line.trim.nonEmpty) {
+        try {
+          val (query, k) = graft.serve.McpServer.parseJsonlRequest(line, defaultK)
+          out.println(answer(query, k))
+        } catch {
+          case e: Throwable => out.println(s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
+        }
+        out.flush()
+      }
+    }
 
-  /** `serve` — the reference's MCP server surface (`src/server.py:19-98`):
-    * one configurable search tool (`--tool-name` / `--tool-description`,
-    * defaults matching `server.py:22-23`) over MCP stdio (default) or the
-    * single-response mode of streamable-http (`--transport http`, `--port`,
-    * `--path`). `--protocol jsonl` keeps the legacy one-JSON-per-line shape. */
   /** Conservative parquet→in-memory inflation for the serving cache gate:
     * cached columnar batches (decompressed, with batch stats) run ~2-4×
     * the snappy parquet bytes for this engine's string-heavy tables, and
@@ -1459,9 +1436,14 @@ object Cli {
     }
   }
 
+  /** `serve` — the reference's MCP server surface (`src/server.py:19-98`):
+    * one configurable search tool (`--tool-name` / `--tool-description`,
+    * defaults matching `server.py:22-23`) over MCP stdio (default) or the
+    * single-response mode of streamable-http (`--transport http`, `--port`,
+    * `--path`). `--protocol jsonl` keeps the legacy one-JSON-per-line shape. */
   private def serveCmd(a: Array[String]): Unit = {
     val db = arg(a, "--db").getOrElse(sys.error("--db required"))
-    val defaultK = arg(a, "--top-k").map(_.toInt).getOrElse(5)
+    val defaultK = topKArg(a)
     val removeP = arg(a, "--trim-prefix")
     // same add-prefix default as search (reference src/cli.py:187-189)
     val addP = arg(a, "--add-prefix").orElse(defaultAddPrefix(db))
@@ -1474,7 +1456,7 @@ object Cli {
     val nearWindow = arg(a, "--window").map(_.toInt)
     val snippets = flag(a, "--snippets")
     thresholdWarning(threshold, fusion, defaultK).foreach(System.err.println)
-    val spark = session(arg(a, "--workers").map(_.toInt))
+    val spark = session(a)
     disableAqeForOnline(spark)
     val (holder, annRef) = openServing(spark, db, cacheFlagOf(a), annArg)
 
@@ -1489,20 +1471,7 @@ object Cli {
     arg(a, "--protocol") match {
       case Some("jsonl") =>
         System.err.println(s"[graft] serving index $db on stdio; one JSON request per line")
-        scala.io.Source.stdin.getLines().foreach { line =>
-          if (line.trim.nonEmpty) {
-            try {
-              val query = QueryRe.findFirstMatchIn(line)
-                .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-                .getOrElse(sys.error("missing \"query\""))
-              val k = TopKRe.findFirstMatchIn(line).map(_.group(1).toInt).getOrElse(defaultK)
-              println(answer(query, k))
-            } catch {
-              case e: Throwable => println(s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
-            }
-            System.out.flush()
-          }
-        }
+        jsonlLoop(scala.io.Source.stdin.getLines(), System.out, defaultK, answer)
       case _ =>
         val mcp = new graft.serve.McpServer(
           toolName = arg(a, "--tool-name").getOrElse("search_documents"),

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * }}}
   *
   * Install either at session build time
-  * (`SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * (`withExtensions(new GraftExtensions)` on the session builder or
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`) or on a
   * live session via [[GraftExtensions.register]] +
   * [[graft.plans.GraftStrategies.install]].

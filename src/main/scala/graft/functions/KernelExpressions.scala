@@ -501,7 +501,13 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   * retries recompute identical values. Used where one expensive kernel
   * value feeds several projected columns AND a filter (the containment
   * verdicts: without the barrier the shared `_i` inlines into the pushed
-  * gate and the kernel runs twice per candidate pair). */
+  * gate and the kernel runs twice per candidate pair).
+  *
+  * Place it ONLY in a Project, Filter, Aggregate or Window: CheckAnalysis
+  * rejects a nondeterministic expression anywhere else (join condition,
+  * sort key, grouping key) with an analysis error far from this
+  * definition. The flag also blocks every predicate/projection movement
+  * around the wrapped value, not just the duplication it exists to stop. */
 case class EvalOnce(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "eval_once"

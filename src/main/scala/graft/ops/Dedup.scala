@@ -338,7 +338,9 @@ object Dedup {
     * + filter pushdown inline the kernel into every consumer and it runs
     * ~2× per candidate pair (round-21 plan: 3 `sorted_intersect_size`
     * occurrences where 1 was intended). Values are identical — the barrier
-    * only pins ONE evaluation per pair. */
+    * only pins ONE evaluation per pair. Use it only in a Project, Filter,
+    * Aggregate or Window: EvalOnce is nondeterministic, so a join
+    * condition, sort key or grouping key fails analysis. */
   def intersectSizeOnce(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.functions.EvalOnce(graft.functions.SortedIntersectSize(

@@ -34,7 +34,10 @@ object ExtraQueries {
     * here the value stream crosses one partial-agg'd (group, value)
     * exchange and the per-group pass runs over DISTINCT values (bounded by
     * the value domain, not the corpus row count), as a running-count
-    * window + one conditional-pick aggregation.
+    * window + one conditional-pick aggregation. For a near-unique value
+    * column (e.g. l_extendedprice) the distinct-value frame approaches the
+    * row count, and each group's sorted window still funnels through one
+    * task — smaller than the old percentile funnel, but the same skew shape.
     *
     * Bit-identical to `PercentileBase.getPercentile` (Spark 4.1.2, verified
     * against the shipped bytecode): position = p·(N−1) with N = non-null

@@ -25,11 +25,11 @@ object SearchQueries {
     * deliberately past Spark's default parquet In-pushdown threshold of 10
     * (`spark.sql.parquet.pushdown.inFilterThreshold`), where the pushed
     * `In(term,…)` filter silently degrades to a min/max RANGE filter and a
-    * term-sorted postings file loses its row-group pruning. The serving
-    * sessions raise the threshold to 1000 (Cli.session / Bench); this
-    * query pins the >10-term SCORING semantics cross-engine, and the
-    * SessionConfSpec pins the pruning cliff by rows-read, and the FtsProbe
-    * wide12 lanes carry the corpus-scale evidence (PLANS.md round-12). */
+    * term-sorted postings file loses its row-group pruning. Every engine
+    * session raises the threshold to 1000 ([[graft.GraftSession]]); this
+    * query pins the >10-term SCORING semantics cross-engine,
+    * SessionConfSpec pins the pruning cliff by rows-read, and PLANS.md
+    * round-12 carries the corpus-scale evidence. */
   private val longQueryTerms = Seq("spark", "join", "merge", "window",
     "batch", "stream", "customer", "order", "value", "scan", "filter", "hash")
   private val longQueryTermsSql = longQueryTerms.mkString("['", "', '", "']")

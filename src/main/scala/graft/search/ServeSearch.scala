@@ -73,15 +73,6 @@ object ServeSearch {
     val spark = index.documents.sparkSession
     import spark.implicits._
 
-    // phase telemetry for ServeProbe (env-gated; zero cost when unset)
-    val debug = sys.env.contains("GRAFT_SERVE_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(label: String): Unit = if (debug) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[serve-debug] $label%-10s ${(t1 - t0) / 1e6}%7.1fms")
-      t0 = t1
-    }
-
     HybridSearch.requireNearCoherent(opts)
     val terms = analyzer.tokenize(query)
 
@@ -235,7 +226,6 @@ object ServeSearch {
     }
     val fts = Await.result(ftsF, Duration.Inf)
     val vss = Await.result(vssF, Duration.Inf)
-    mark("legs")
 
     // ---- J2 + A4 fusion over the two ≤k lists, driver-local ----
     val ftsM = fts.toMap
@@ -302,7 +292,6 @@ object ServeSearch {
         .filter(col("doc_id").isin(ids: _*))
         .select(fetchCols.map(col): _*)
         .collect().map(r => r.getString(0) -> r).toMap
-    mark("fetch")
 
     // ---- the ≤2k-row tail, driver-local ----
     final case class Hit(docId: String, filePath: String, headerPath: String,
@@ -401,7 +390,6 @@ object ServeSearch {
     val schema = StructType(
       if (withOriginal) base :+ StructField("original_score", DoubleType, nullable = false)
       else base)
-    mark("tail")
     spark.createDataFrame(
       java.util.Arrays.asList(out: _*), schema)
   }

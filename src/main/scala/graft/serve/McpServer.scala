@@ -26,6 +26,38 @@ object McpServer {
   /** Versions this server implements (same wire shape); anything else gets
     * [[ProtocolVersion]] back per the MCP version-negotiation rules. */
   val SupportedProtocolVersions: Set[String] = Set("2024-11-05", "2025-03-26")
+
+  /** The accepted `top_k` range on every serving surface (MCP, jsonl,
+    * `--top-k`) — the reference's bound (`src/cli.py:279-284`). */
+  val MinTopK = 1
+  val MaxTopK = 100
+
+  /** A request's `top_k` outside [[MinTopK]]..[[MaxTopK]]; the search is
+    * not run. */
+  final class TopKOutOfRange(k: Long) extends IllegalArgumentException(
+    s"top_k must be between $MinTopK and $MaxTopK, got $k")
+
+  def checkTopK(k: Long): Int =
+    if (k < MinTopK || k > MaxTopK) throw new TopKOutOfRange(k) else k.toInt
+
+  private val mapper = new ObjectMapper()
+
+  /** Decode one `--protocol jsonl` request line, `{"query": "...",
+    * "top_k": N}`, into (query, top_k) with a JSON parser, so a query sent
+    * as backslash-u escapes reaches the analyzer as the text it encodes.
+    * `top_k` defaults to `defaultK` and is range-checked. Throws on a
+    * malformed line or a missing query; the serve loop answers those with
+    * `{"error": ...}`. */
+  def parseJsonlRequest(line: String, defaultK: Int): (String, Int) = {
+    val msg =
+      try mapper.readTree(line)
+      catch { case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        throw new IllegalArgumentException(s"malformed JSON request: ${e.getOriginalMessage}")
+      }
+    val query = Option(msg.get("query")).filter(_.isTextual).map(_.asText())
+      .getOrElse(throw new IllegalArgumentException("missing \"query\""))
+    (query, checkTopK(Option(msg.get("top_k")).map(_.asLong(defaultK)).getOrElse(defaultK.toLong)))
+  }
 }
 
 final class McpServer(
@@ -47,10 +79,10 @@ final class McpServer(
     s"search tool name '$toolName' collides with the reload tool; " +
       "rename one of them")
 
-  private val mapper = new ObjectMapper()
   private val f = JsonNodeFactory.instance
 
-  import McpServer.{ProtocolVersion, SupportedProtocolVersions}
+  import McpServer.{MaxTopK, MinTopK, ProtocolVersion, SupportedProtocolVersions,
+    checkTopK, mapper}
 
   private def resp(id: JsonNode): ObjectNode = {
     val o = f.objectNode()
@@ -81,6 +113,8 @@ final class McpServer(
     k.put("type", "integer")
     k.put("description", "Number of results to return")
     k.put("default", defaultTopK)
+    k.put("minimum", MinTopK)
+    k.put("maximum", MaxTopK)
     schema.putArray("required").add("query")
     t
   }
@@ -170,13 +204,13 @@ final class McpServer(
           Option(args.get("query")).map(_.asText()) match {
             case None => Some(error(id, -32602, "missing required argument: query"))
             case Some(query) =>
-              val topK = Option(args.get("top_k")).map(_.asInt(defaultTopK))
-                .getOrElse(defaultTopK)
+              val topK = Option(args.get("top_k")).map(_.asLong(defaultTopK))
+                .getOrElse(defaultTopK.toLong)
               val o = resp(id)
               val r = o.putObject("result")
               val content = r.putArray("content")
               try {
-                val resultsJson = searchFn(query, topK)
+                val resultsJson = searchFn(query, checkTopK(topK))
                 val c = content.addObject()
                 c.put("type", "text")
                 c.put("text", resultsJson)

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Round-21 plan-evidence dumper: write `.explain("formatted")` of named
+/** The plan-evidence dumper: write `.explain("formatted")` of named
   * declared queries to `plans/<tag>/<query>_<suffix>.txt` so optimization
   * claims ("2 Exchange → 1", "window → partial agg") are checkable against
   * committed artifacts without running Spark.
@@ -10,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.ExplainDump <tag> <suffix> <query...>
   *   e.g. runMain graft.tools.ExplainDump r21 before q_dedup_containment_lshe
   *
-  * Session posture matches Bench (shuffle.partitions = cpus, strategies
-  * installed) so the dumped plan is the plan the bench times; sfDir comes
-  * from SPARK_GRAFT_SF_DIR like every other driver main.
+  * The session is [[graft.GraftSession]]'s, the one Bench times, so the
+  * dumped plan is the plan the bench runs; sfDir comes from
+  * SPARK_GRAFT_SF_DIR like Bench.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -20,18 +18,7 @@ object ExplainDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        graft.Cli.ServingInFilterThreshold)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftStrategies.install(spark)
+    val spark = graft.GraftSession.create(logLevel = "ERROR")
     val dir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(dir)
     for (n <- names) {

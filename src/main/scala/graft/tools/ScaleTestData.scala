@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic 10× scale-up of the sf0.1 testdata into a local sf1-shape
@@ -54,13 +54,7 @@ object ScaleTestData {
     require(mode != "grow" || factor <= 10,
       s"grow mode supports factor <= 10 (got $factor); nest two grow runs " +
         "for larger decades (see the scaladoc invariant)")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
 
     def t(name: String): DataFrame = spark.read.parquet(s"$in/$name.parquet")
     def save(df: DataFrame, name: String): Unit = {

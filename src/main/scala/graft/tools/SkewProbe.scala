@@ -1,27 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Salted-join skew audit: measure the salted big×big join AGAINST its
-  * unsalted sibling on a fixture with a genuinely HOT key — the scenario
-  * the technique exists for (the round-10 audit measured only the uniform-
-  * fixture replication cost; this tool measures the win).
+/** Salted-join skew fixtures: the salted big×big join and its unsalted
+  * sibling over a fixture with a genuinely HOT key — the scenario the
+  * technique exists for. Bench's skew lane times the pair and SkewJoinSpec
+  * pins the busiest task's record counts.
   *
-  * Fixture: `lineitem` replicated `REP`× (row-explode, deterministic),
-  * with `HOT_FRAC` of the probe rows remapped onto ONE hot orderkey — the
+  * Fixture: `lineitem` replicated `rep`× (row-explode, deterministic),
+  * with `1/hotMod` of the probe rows remapped onto ONE hot orderkey — the
   * canonical power-user/boilerplate-document shape. Build side = `orders`
   * (contains the hot key once, like any dimension-ish fact).
   *
-  * Both variants run with AQE's skew-join split DISABLED: explicit salting
-  * is the portable plan-level guarantee for KNOWN hot keys (it also works
-  * on engines/plans where the runtime splitter can't — e.g. under
-  * `spark.sql.adaptive.enabled=false` serving sessions); the point here is
-  * to isolate the technique itself. An AQE-on pair is also reported for
-  * honesty — at 100 TB you'd leave AQE on AND salt the known-hot keys.
-  *
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  *     sbt "runMain graft.tools.SkewProbe"
+  * Explicit salting is the portable plan-level guarantee for KNOWN hot
+  * keys: it also works on plans where AQE's runtime skew splitter can't —
+  * e.g. under `spark.sql.adaptive.enabled=false` serving sessions.
   */
 object SkewProbe {
 
@@ -59,47 +53,4 @@ object SkewProbe {
       .withColumn("l_orderkey",
         when(pmod(col("l_orderkey") + col("_rep"), lit(hotMod.toLong)) === 0, lit(1L))
           .otherwise(col("l_orderkey")))
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val rep = sys.env.getOrElse("SKEW_REP", "10").toInt
-    val hotMod = sys.env.getOrElse("SKEW_HOT_MOD", "2").toInt // 1/2 of rows hot
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount")
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
-      .select("o_orderkey", "o_orderpriority")
-    val li = skewedProbeSide(li0, rep, hotMod)
-
-    def time(df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def bestOf2(df: => DataFrame): Double = math.min(time(df), time(df))
-
-    // results must be identical before any timing is worth reading
-    val a = unsalted(li, o).collect().toSeq
-    val b = salted(li, o, 8).collect().toSeq
-    require(a == b, s"salted != unsalted:\n$a\n$b")
-
-    for (skewFix <- Seq(false, true)) {
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewFix.toString)
-      val tu = bestOf2(unsalted(li, o))
-      val ts = bestOf2(salted(li, o, 8))
-      println("%s".formatLocal(java.util.Locale.ROOT,
-        s"""{"aqe_skew_join":$skewFix,"rep":$rep,"hot_frac":"1/$hotMod",""" +
-          s""""unsalted_sec":${"%.2f".formatLocal(java.util.Locale.ROOT, tu)},""" +
-          s""""salted_sec":${"%.2f".formatLocal(java.util.Locale.ROOT, ts)},""" +
-          s""""speedup":${"%.2f".formatLocal(java.util.Locale.ROOT, tu / ts)}}"""))
-    }
-    spark.stop()
-  }
 }

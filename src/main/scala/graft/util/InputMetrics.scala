@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * because the plan string cannot show them (`PushedFilters: [In(…)]`
   * prints whether or not parquet stats prune; the In→range threshold
   * degradation is equally invisible). One definition shared by the specs
-  * (SessionConfSpec, DocFetchPruneSpec) and the audit tools (FetchProbe) so
-  * the drain heuristic can't drift between them. */
+  * (SessionConfSpec, DocFetchPruneSpec, SkewJoinSpec) so the drain
+  * heuristic can't drift between them. */
 object InputMetrics {
 
   /** Runs `work`, folding a per-task metric across every task that ended

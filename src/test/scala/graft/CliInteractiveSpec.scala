@@ -447,6 +447,59 @@ class CliInteractiveSpec extends AnyFunSuite {
     assert(line.contains("\"highlighted\":\"[spark] runs fast\""), line)
   }
 
+  test("jsonl serve: an escaped Japanese query returns the raw query's hits; " +
+      "out-of-range top_k and malformed lines answer {\"error\"} without searching") {
+    import spark.implicits._
+    val an = graft.analyze.DefaultAnalyzer
+    val corpus = Seq(
+      ("d1", "全文検索と意味検索のハイブリッド", Array(1f, 0f, 0f)),
+      ("d2", "味噌汁と炊き込みご飯の作り方", Array(0f, 1f, 0f)))
+      .map { case (id, text, e) => (id, text, an.tokenize(text), e) }
+      .toDF("doc_id", "content", "tokens", "embedding")
+      .withColumn("file_path", concat(lit("docs/"), col("doc_id")))
+      .withColumn("header_path", lit(""))
+      .withColumn("line_start", lit(1)).withColumn("line_end", lit(1))
+    val index = IndexData.fromDocuments(corpus,
+      Seq(Setting("embedding_model", "hashing"), Setting("embedding_dim", "3")).toDF())
+    var searches = 0
+    def answer(q: String, k: Int): String = {
+      searches += 1
+      s"""{"results":${Cli.hitsJson(Cli.runSearch(index, "unused-db", q, k,
+        rerank = true, None, None))}}"""
+    }
+    def serve(lines: String*): Seq[String] = {
+      val bos = new ByteArrayOutputStream()
+      Cli.jsonlLoop(lines.iterator, new PrintStream(bos, true, "UTF-8"), 5, answer)
+      bos.toString("UTF-8").trim.split("\n").toSeq
+    }
+
+    val ja = "全文検索"
+    val escaped = ja.flatMap(c => "\\" + "u" + "%04x".format(c.toInt))
+    val Seq(raw, esc) = serve(s"""{"query":"$ja","top_k":3}""",
+      s"""{"query":"$escaped","top_k":3}""")
+    assert(raw.contains("\"doc_id\":\"d1\""), raw)
+    assert(esc == raw)
+
+    searches = 0
+    val errs = serve("""{"query":"x","top_k":0}""", "", """{"query":"x","top_k":101}""",
+      "{not json", """{"top_k":3}""")
+    assert(searches == 0)
+    assert(errs.size == 4, errs) // the blank line gets no answer
+    assert(errs.forall(_.startsWith("{\"error\":")), errs)
+    assert(errs(0) == """{"error":"top_k must be between 1 and 100, got 0"}""")
+    assert(errs(1) == """{"error":"top_k must be between 1 and 100, got 101"}""")
+    assert(errs(2).contains("malformed JSON request"), errs(2))
+  }
+
+  test("--top-k outside 1..100 fails with the named error before any Spark work") {
+    for (cmd <- Seq("search", "serve"); k <- Seq("0", "101")) {
+      val e = intercept[graft.serve.McpServer.TopKOutOfRange](
+        Cli.main(Array(cmd, "--db", "/tmp/never_created_idx", "--query", "x", "--top-k", k)))
+      assert(e.getMessage == s"top_k must be between 1 and 100, got $k")
+    }
+    assert(!new java.io.File("/tmp/never_created_idx").exists())
+  }
+
   test("--queries batch CLI face: rows bit-match N single searches through " +
       "the SAME analyzer/embedder/reranker resolution (round-18 directive #4)") {
     import spark.implicits._

@@ -13,10 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * [In(term, …)]` prints either way — it is the parquet-level predicate
   * that changes), so this spec asserts the thing that actually matters:
   * ROWS READ, via task input metrics over a term-sorted multi-file fixture.
-  * Every serving session raises the threshold via
-  * [[Cli.ServingInFilterThreshold]]; q_f4_bm25_longquery pins the >10-term
-  * SCORING semantics cross-engine, and the FtsProbe corpus audit carries
-  * the at-scale evidence (PLANS.md round-12). */
+  * [[GraftSession]] raises the threshold for every session to
+  * [[Cli.ServingInFilterThreshold]], so this spec sets each side of the
+  * cliff itself; q_f4_bm25_longquery pins the >10-term SCORING semantics
+  * cross-engine, and PLANS.md round-12 carries the at-scale evidence. */
 class SessionConfSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._

@@ -2,19 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One SparkSession shared by every suite (sbt runs tests in one forked JVM). */
+/** One SparkSession shared by every suite (sbt runs tests in one forked
+  * JVM): the [[GraftSession]] posture at a fixed 4 threads. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftStrategies.install(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.create(workers = Some(4))
 }

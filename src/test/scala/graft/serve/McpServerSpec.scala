@@ -90,6 +90,47 @@ class McpServerSpec extends AnyFunSuite {
     assert(call.exists(_.contains("\\\"k\\\":7")))
   }
 
+  test("top_k outside 1..100 is a named isError result and runs no search; " +
+      "the schema states the range") {
+    var searches = 0
+    val counting = new McpServer("t", "d", (_, k) => { searches += 1; s"""{"k":$k}""" })
+    for (k <- Seq("0", "101", "-3", "10000000000")) {
+      val r = counting.handle(
+        s"""{"jsonrpc":"2.0","id":1,"method":"tools/call","params":{"name":"t","arguments":{"query":"x","top_k":$k}}}""").get
+      assert(r.contains(""""isError":true"""), r)
+      assert(r.contains(s"top_k must be between 1 and 100, got $k"), r)
+    }
+    assert(searches == 0)
+    for (k <- Seq(1, 100)) {
+      val r = counting.handle(
+        s"""{"jsonrpc":"2.0","id":2,"method":"tools/call","params":{"name":"t","arguments":{"query":"x","top_k":$k}}}""").get
+      assert(r.contains(""""isError":false"""), r)
+    }
+    assert(searches == 2)
+    val schema = counting.handle("""{"jsonrpc":"2.0","id":3,"method":"tools/list"}""").get
+    assert(schema.contains(""""minimum":1"""), schema)
+    assert(schema.contains(""""maximum":100"""), schema)
+  }
+
+  test("jsonl requests decode as JSON: escapes, range-checked top_k, named errors") {
+    val ja = "全文検索"
+    val escaped = ja.flatMap(c => "\\" + "u" + "%04x".format(c.toInt))
+    assert(McpServer.parseJsonlRequest(s"""{"query":"$escaped","top_k":3}""", 5) == (ja -> 3))
+    assert(McpServer.parseJsonlRequest(s"""{"query":"$ja"}""", 5) == (ja -> 5))
+    assert(McpServer.parseJsonlRequest("""{"top_k":2,"query":"a \"b\" \\ c\n"}""", 5) ==
+      ("a \"b\" \\ c\n" -> 2))
+    for (k <- Seq(0, 101)) {
+      val e = intercept[McpServer.TopKOutOfRange](
+        McpServer.parseJsonlRequest(s"""{"query":"x","top_k":$k}""", 5))
+      assert(e.getMessage == s"top_k must be between 1 and 100, got $k")
+    }
+    val bad = intercept[IllegalArgumentException](McpServer.parseJsonlRequest("{not json", 5))
+    assert(bad.getMessage.startsWith("malformed JSON request"), bad.getMessage)
+    val missing = intercept[IllegalArgumentException](
+      McpServer.parseJsonlRequest("""{"top_k":3}""", 5))
+    assert(missing.getMessage == "missing \"query\"")
+  }
+
   test("a throwing search surfaces as isError, not a dead server") {
     val boom = new McpServer("t", "d", (_, _) => throw new RuntimeException("no index"))
     val r = boom.handle(
