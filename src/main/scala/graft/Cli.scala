@@ -270,8 +270,8 @@ object Cli {
     val st = index.stats.collect().head
     val vocab = index.termdf.count()
     def j(s: String) = graft.util.Json.str(s)
-    val settingsJson = index.settings.collect()
-      .map(r => s"${j(r.getString(0))}: ${j(r.getString(1))}")
+    val settingsJson = index.settingsMap.toSeq
+      .map { case (k, v) => s"${j(k)}: ${j(v)}" }
       .sorted.mkString("{", ",", "}")
     // formatLocal(Locale.ROOT): the plain f-interpolator uses the JVM
     // default locale, and a comma-decimal locale (de_DE) would emit
@@ -610,8 +610,28 @@ object Cli {
       .getOrElse(DefaultAnalyzer)
 
   /** Query-time embedder must match the index-time model — resolved from the
-    * index `settings`, like the reference (`src/cli.py:327-338`). */
-  private def embedderFor(index: IndexData, db: String): graft.embed.Embedder = {
+    * index `settings`, like the reference (`src/cli.py:327-338`). Resolved
+    * ONCE per loaded artifact: a tfidf/w2v model load is a parquet listing
+    * plus a collect of the whole model, which a served request must not
+    * repeat. Only a successful resolution is cached, so a missing or
+    * mis-dimensioned model raises its named error on every request. */
+  private def embedderFor(index: IndexData, db: String): graft.embed.Embedder =
+    Option(embedderCache.get(index.settings)).collect { case (`db`, e) => e }
+      .getOrElse {
+        val e = resolveEmbedder(index, db)
+        embedderCache.put(index.settings, db -> e)
+        e
+      }
+
+  /** Resolved embedders, weak-keyed on the artifact's `settings` frame
+    * (the [[graft.search.ServeSearch]] cache idiom): a reloaded artifact or
+    * an [[IndexData.upsertSetting]] copy carries a new frame, so it
+    * resolves afresh, and a dropped artifact releases its entry. The value
+    * keeps the `db` it was resolved against (the model path lives there). */
+  private val embedderCache = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.sql.DataFrame, (String, graft.embed.Embedder)]())
+
+  private def resolveEmbedder(index: IndexData, db: String): graft.embed.Embedder = {
     val dim = index.setting("embedding_dim").map(_.toInt).getOrElse(64)
     val tokenize = analyzerFor(index).tokenize _
     index.setting("embedding_model") match {

@@ -98,10 +98,22 @@ final case class IndexData(
     positions.foreach(_.unpersist(blocking))
   }
 
-  /** S6-style point lookup (reference `src/db.py:181-196`). */
-  def setting(key: String): Option[String] =
-    settings.filter(col("key") === key).select("value")
-      .collect().headOption.map(_.getString(0))
+  /** The settings rows as a driver-local map, collected ONCE per instance
+    * (a handful of rows — the [[AnnIndex.centroidArray]] pattern): a
+    * per-lookup `filter → collect` would schedule a Spark job per key on
+    * every served request (analyzer + embedder resolution reads three
+    * keys). A snapshot is safe because the instance never sees a new
+    * settings frame: [[upsertSetting]] returns a `copy` (a fresh snapshot),
+    * and serving swaps in a freshly loaded instance when the committed
+    * fingerprint ([[IndexData.artifactVersion]], `settings/_SUCCESS`
+    * included) moves. A duplicated key keeps its FIRST row. */
+  lazy val settingsMap: Map[String, String] =
+    settings.select("key", "value").collect()
+      .reverseIterator.map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** S6-style point lookup (reference `src/db.py:181-196`), served from
+    * [[settingsMap]]: zero Spark jobs after the first lookup. */
+  def setting(key: String): Option[String] = settingsMap.get(key)
 
   /** S5: keyed upsert into the settings dataset (reference
     * `INSERT OR REPLACE`, `src/db.py:170-178`) — read-modify-write of the

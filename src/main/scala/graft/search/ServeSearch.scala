@@ -27,15 +27,23 @@ import graft.rerank.Reranker
   * (SURVEY.md §4.2: fusion re-ranks the union of two top-k lists, never the
   * corpus).
   *
-  * So this path runs exactly THREE bounded Spark jobs per request:
+  * So a warm request in the online posture (AQE off, as `graft serve`
+  * sets it) runs three bounded Spark jobs for the exact and IVF legs and
+  * four for PQ — counts pinned by ServeJobsSpec:
   *
   *   1. the BM25 leg — filter + sum + top-k over the session's cached
   *      impact-scored postings ([[scoredPostings]]) — collected, and
   *   2. the VSS leg (the same exact/IVF/PQ leg builders), collected
   *      CONCURRENTLY with 1 (independent subtrees of the same session);
+  *      PQ is two jobs here: the ADC shortlist, then its exact rerank;
   *   3. the candidate fetch: a pushed `doc_id IN (…)` filter over the
   *      cached documents dataset (≤2k ids — the same candidate-set
   *      semantics as the broadcast join it replaces), collected.
+  *
+  * A restriction over the positions sidecar adds its probe job plus one
+  * broadcast job per term join: +2 for a two-term `--phrase` filter, +4
+  * for a two-term `--near` request (the probe runs in the near-first BM25
+  * leg and again in the candidate restriction).
   *
   * Fusion, path rewrite, phrase filter, rerank, threshold, sort and limit
   * then run driver-locally over the collected ≤2k candidate rows,

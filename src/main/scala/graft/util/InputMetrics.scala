@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Rows actually read off storage (post row-group pruning) for a block of
@@ -8,45 +8,48 @@ import org.apache.spark.sql.SparkSession
   * because the plan string cannot show them (`PushedFilters: [In(…)]`
   * prints whether or not parquet stats prune; the In→range threshold
   * degradation is equally invisible). One definition shared by the specs
-  * (SessionConfSpec, DocFetchPruneSpec, SkewJoinSpec) so the drain
-  * heuristic can't drift between them. */
+  * (SessionConfSpec, DocFetchPruneSpec, SkewJoinSpec, ServeJobsSpec) so the
+  * drain heuristic can't drift between them — job counts included. */
 object InputMetrics {
 
   /** Runs `work`, folding a per-task metric across every task that ended
-    * during the window. The listener bus drains ASYNCHRONOUSLY and a scan
-    * may split across several tasks, so the read-out waits until the
-    * accumulated value has been BOTH nonzero and stable for a few polls —
+    * during the window, and counting the jobs that started in it. The
+    * listener bus drains ASYNCHRONOUSLY and a scan may split across several
+    * tasks, so the read-out waits until the accumulated value has been BOTH
+    * nonzero and stable (task and job counts too) for a few polls —
     * not merely past a partial target — bounded by a deadline. A value
     * stable AT ZERO exits after a longer poll count (~1 s) instead of
     * spinning the whole deadline: a fully pruned scan or an empty relation
     * legitimately reads zero (round-14 ADVICE). Callers must not run
     * concurrent jobs on the session during the window. */
   private def folded[T](spark: SparkSession, expectNonZero: Boolean,
-      fold: (Long, SparkListenerTaskEnd) => Long)(work: => T): (T, Long, Long) = {
+      fold: (Long, SparkListenerTaskEnd) => Long)(work: => T): (T, Long, Long, Long) = {
     @volatile var acc = 0L
     @volatile var tasks = 0L
+    @volatile var jobs = 0L
     val listener = new SparkListener {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         acc = fold(acc, te); tasks += 1
       }
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs += 1
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       val r = work
       val deadline = System.nanoTime() + 10e9.toLong
-      var last = (-1L, -1L)
+      var last = (-1L, -1L, -1L)
       var stable = 0
       var zeroStable = 0
       while (stable < 4 && (expectNonZero || zeroStable < 20) &&
           System.nanoTime() < deadline) {
         Thread.sleep(50)
-        val now = (acc, tasks)
+        val now = (acc, tasks, jobs)
         if (acc > 0 && now == last) stable += 1
         else if (acc == 0 && last._1 == 0 && now == last) zeroStable += 1
         else { stable = 0; zeroStable = 0 }
         last = now
       }
-      (r, acc, tasks)
+      (r, acc, tasks, jobs)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -61,7 +64,7 @@ object InputMetrics {
     * keeps polling to the full 10 s deadline instead. */
   def rowsRead[T](spark: SparkSession, expectNonZero: Boolean = false)(
       work: => T): (T, Long) = {
-    val (r, acc, _) = folded(spark, expectNonZero,
+    val (r, acc, _, _) = folded(spark, expectNonZero,
       (acc, te) => acc + te.taskMetrics.inputMetrics.recordsRead)(work)
     (r, acc)
   }
@@ -76,9 +79,23 @@ object InputMetrics {
     * tail is NOT read amplification (scheduling/JIT/page-cache), while a
     * tail request with 10× the tasks is a pruning regression. */
   def readProfile[T](spark: SparkSession, expectNonZero: Boolean = false)(
-      work: => T): (T, Long, Long) =
-    folded(spark, expectNonZero,
+      work: => T): (T, Long, Long) = {
+    val (r, acc, tasks, _) = folded(spark, expectNonZero,
       (acc, te) => acc + te.taskMetrics.inputMetrics.recordsRead)(work)
+    (r, acc, tasks)
+  }
+
+  /** (result, Spark jobs started in the window) — the per-request
+    * scheduling cost of a serving path. Each job pays the local[n]
+    * scheduling floor, so the count is the deterministic proxy for that
+    * latency: it depends only on the plan, never on host load. The drain
+    * keys on the task count, so a window that runs no job exits after the
+    * ~1 s zero-stable wait and reads 0. */
+  def jobCount[T](spark: SparkSession)(work: => T): (T, Long) = {
+    val (r, _, _, jobs) = folded(spark, expectNonZero = false,
+      (acc, _) => acc + 1)(work)
+    (r, jobs)
+  }
 
   /** (result, BYTES read off storage) — the currency of the PQ serving
     * story: codes rows ≈ embedding rows in COUNT (one per embedded doc),
@@ -88,7 +105,7 @@ object InputMetrics {
     * RATIOS between modes, never raw byte counts. */
   def bytesRead[T](spark: SparkSession, expectNonZero: Boolean = false)(
       work: => T): (T, Long) = {
-    val (r, acc, _) = folded(spark, expectNonZero,
+    val (r, acc, _, _) = folded(spark, expectNonZero,
       (acc, te) => acc + te.taskMetrics.inputMetrics.bytesRead)(work)
     (r, acc)
   }
@@ -102,7 +119,7 @@ object InputMetrics {
     * `expectNonZero` as in [[rowsRead]]. */
   def maxShuffleRead[T](spark: SparkSession, expectNonZero: Boolean = false)(
       work: => T): (T, Long) = {
-    val (r, acc, _) = folded(spark, expectNonZero, (acc, te) =>
+    val (r, acc, _, _) = folded(spark, expectNonZero, (acc, te) =>
       math.max(acc, te.taskMetrics.shuffleReadMetrics.recordsRead))(work)
     (r, acc)
   }

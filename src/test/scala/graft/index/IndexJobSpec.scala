@@ -92,6 +92,23 @@ class IndexJobSpec extends AnyFunSuite {
     assert(reloaded.setting("new_key").contains("v1"))
   }
 
+  test("settings are a per-instance snapshot: upsertSetting returns a copy " +
+      "with the new value and the original keeps its own") {
+    val spark2 = spark
+    import spark2.implicits._
+    val original = IndexData.fromDocuments(
+      Seq(("d1", Seq("a", "b"))).toDF("doc_id", "tokens"),
+      Seq(graft.core.Schemas.Setting("analyzer", "default")).toDF())
+    assert(original.setting("analyzer").contains("default"))
+    val updated = original.upsertSetting("analyzer", "bigram")
+      .upsertSetting("new_key", "v1")
+    assert(updated.setting("analyzer").contains("bigram"))
+    assert(updated.setting("new_key").contains("v1"))
+    assert(original.setting("analyzer").contains("default"))
+    assert(original.setting("new_key").isEmpty)
+    assert(original.settingsMap == Map("analyzer" -> "default"))
+  }
+
   test("runRows indexes a row corpus: one row = one chunk, searchable end-to-end") {
     val spark2 = spark
     import spark2.implicits._

@@ -1,0 +1,133 @@
+package graft.serve
+
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.{Cli, TestSpark}
+import graft.TestFixtures.servingLoad
+import graft.core.Schemas.Setting
+import graft.embed.HashingEmbedder
+import graft.index.{IndexData, IndexJob}
+import graft.search.ServeSearch
+import graft.util.InputMetrics
+
+/** The served request's Spark job budget, pinned as job COUNTS (never
+  * wall-clock): a warm `Cli.runSearch` over a cache-pinned artifact runs
+  * the BM25 leg, the vector leg and the candidate fetch — 3 jobs for the
+  * exact and IVF legs, 4 for PQ (codes shortlist + exact rerank of the
+  * shortlist); a positions restriction adds its probe plus one broadcast
+  * job per term join, in the candidate restriction and — near-first
+  * ranking — in the BM25 leg too. Analyzer and embedder resolution from the
+  * artifact settings must add none: the settings are a per-instance
+  * snapshot and the embedder is resolved once per loaded artifact. */
+class ServeJobsSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private val dim = 8
+
+  /** An on-disk artifact with IVF + PQ sidecars, loaded the way
+    * `graft serve --cache` loads it (cache pins + impact-scored postings). */
+  private lazy val (dir, index) = {
+    val he = new HashingEmbedder(dim)
+    val contents = Seq(
+      "d1" -> "spark runs fast and spark scales",
+      "d2" -> "duck db is a small database",
+      "d3" -> "spark spark spark joins tables",
+      "d4" -> "unrelated words entirely here",
+      "d5" -> "fast joins merge sorted tables",
+      "d6" -> "spark streams merge windows",
+      "d7" -> "database tables store rows",
+      "d8" -> "rows and windows and streams")
+    val df = contents.map { case (id, text) =>
+        (id, text, text.split(" ").toSeq, he.embed(Seq(text)).head) }
+      .toDF("doc_id", "content", "tokens", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+      .withColumn("file_path", concat(lit("docs/"), col("doc_id")))
+      .withColumn("header_path", lit(""))
+      .withColumn("line_start", lit(1)).withColumn("line_end", lit(1))
+    val tmp = java.nio.file.Files.createTempDirectory("servejobs").toString
+    IndexData.write(df, Seq(Setting("embedding_model", he.name),
+      Setting("embedding_dim", dim.toString),
+      Setting("analyzer", "whitespace")).toDF(), tmp)
+    IndexJob.withPq(IndexJob.withAnn(IndexData.load(spark, tmp), tmp,
+      annClusters = 2, annIters = 2), tmp, pqCodes = 2)
+    (tmp, servingLoad(spark, tmp))
+  }
+
+  /** Jobs scheduled by one request, after a warm-up request of the same
+    * mode (first-touch work — settings snapshot, embedder resolution,
+    * centroid collect — is per artifact, not per request). Runs in the
+    * online posture `graft serve` sets (AQE off: under AQE the BM25 leg's
+    * shuffle map stage would run as a job of its own). */
+  private def jobsPerRequest(ann: (Int, Int), phrase: Boolean = false,
+      near: Option[String] = None,
+      warm: String = "spark joins tables", query: String = "fast merge windows",
+      served: IndexData = index, db: String = dir): Long = {
+    def run(q: String) = Cli.runSearch(served, db, q, 3, rerank = true,
+      None, None, ann, phrase = phrase,
+      nearRaw = near, nearWindow = near.map(_ => 2))
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      assert(run(warm).nonEmpty)
+      val (hits, jobs) = InputMetrics.jobCount(spark)(run(query))
+      assert(hits.nonEmpty)
+      jobs
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+  }
+
+  test("a warm served request schedules 3 jobs for exact and IVF, 4 for PQ") {
+    assert(jobsPerRequest((0, 0)) == 3, "exact")
+    assert(jobsPerRequest((2, 0)) == 3, "ivf")
+    assert(jobsPerRequest((0, 4)) == 4, "pq")
+  }
+
+  test("a two-term phrase filter adds 2 jobs (positions probe + the " +
+      "broadcast side of its term join); a two-term near request adds 4 " +
+      "(the same probe in the BM25 leg and in the candidate restriction)") {
+    assert(jobsPerRequest((0, 0), phrase = true,
+      warm = "spark joins", query = "merge sorted") == 5, "exact + phrase")
+    assert(jobsPerRequest((0, 0), near = Some("merge,tables"),
+      warm = "spark joins tables", query = "fast merge tables") == 7, "exact + near")
+  }
+
+  test("a tfidf artifact loads its model once per loaded artifact; a " +
+      "missing model fails every request with its named error") {
+    val docs = java.nio.file.Files.createTempDirectory("servejobs-docs")
+    Seq("a" -> "spark joins tables fast", "b" -> "merge sorted windows",
+        "c" -> "database rows and tables").foreach { case (n, text) =>
+      java.nio.file.Files.writeString(docs.resolve(s"$n.md"), s"# $n\n\n$text\n")
+    }
+    val db = java.nio.file.Files.createTempDirectory("servejobs-tfidf").toString + "/idx"
+    IndexJob.runTfIdf(spark, Seq(docs.toString), db, dim = 16)
+    val served = servingLoad(spark, db)
+    assert(served.setting("embedding_model").exists(_.startsWith("tfidf-")))
+    assert(jobsPerRequest((0, 0), warm = "spark tables", query = "merge windows",
+      served = served, db = db) == 3, "model load must not repeat per request")
+    served.uncacheAll(); ServeSearch.releaseScored(served)
+
+    val fs = new org.apache.hadoop.fs.Path(db)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(db, "tfidf_model"), true)
+    val broken = IndexData.load(spark, db)
+    (1 to 2).foreach { i =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        Cli.runSearch(broken, db, "spark", 3, rerank = true, None, None))
+      assert(e.getMessage.contains("tfidf_model"), s"request $i: ${e.getMessage}")
+    }
+  }
+
+  test("setting(k) schedules no job after the first lookup on an instance") {
+    val fresh = IndexData.load(spark, dir)
+    val (first, firstJobs) = InputMetrics.jobCount(spark)(fresh.setting("analyzer"))
+    assert(first.contains("whitespace"))
+    assert(firstJobs >= 1, "the snapshot is collected on first lookup")
+    val (again, jobs) = InputMetrics.jobCount(spark) {
+      Seq("analyzer", "embedding_model", "embedding_dim", "absent_key")
+        .map(fresh.setting)
+    }
+    assert(again == Seq(Some("whitespace"), Some(s"hashing-bow-$dim"),
+      Some(dim.toString), None))
+    assert(jobs == 0)
+  }
+}

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.TestFixtures.servingLoad
 import graft.analyze.WhitespaceAnalyzer
 import graft.core.Schemas.Setting
 import graft.embed.HashingEmbedder
@@ -28,14 +29,6 @@ class ServeReloadSpec extends AnyFunSuite {
       .withColumn("header_path", lit(""))
       .withColumn("line_start", lit(1)).withColumn("line_end", lit(1))
 
-  /** The `graft serve` warm-load shape: cache pins + scored-frame build. */
-  private def warmLoad(dir: String): IndexData = {
-    val i = IndexData.load(spark, dir).cached()
-    i.stats.count()
-    ServeSearch.scoredPostings(i)
-    i
-  }
-
   private def hits(index: IndexData, q: String): Seq[String] =
     ServeSearch.search(index, q, WhitespaceAnalyzer)
       .select("doc_id").as[String].collect().toSeq
@@ -44,7 +37,7 @@ class ServeReloadSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("reload-noop").toString
     IndexData.write(docsDf(Seq("d1" -> "spark runs fast")),
       Seq(Setting("embedding_model", "test")).toDF(), dir)
-    val holder = ServingIndex.open(spark, dir, () => warmLoad(dir))
+    val holder = ServingIndex.open(spark, dir, () => servingLoad(spark, dir))
     val before = holder.current
     assert(!holder.checkAndReload())
     assert(holder.current eq before)
@@ -69,10 +62,10 @@ class ServeReloadSpec extends AnyFunSuite {
       if (old != null)
         releasedInWindow = Seq(old.postings.storageLevel,
           old.documents.storageLevel, oldScored.storageLevel)
-      warmLoad(dir)
+      servingLoad(spark, dir)
     })
     old = holder.current
-    oldScored = ServeSearch.scoredPostings(old) // the frame warmLoad cached
+    oldScored = ServeSearch.scoredPostings(old) // the frame servingLoad cached
     assert(hits(holder.current, "volcano").isEmpty)
 
     Thread.sleep(5) // commit-marker mtime granularity is ms
@@ -102,7 +95,7 @@ class ServeReloadSpec extends AnyFunSuite {
     Files.writeString(Paths.get(docs, "a.md"), "# Alpha\n\nspark merges sorted runs\n")
     IndexJob.run(spark, Seq(docs), idx, embedder, opts = opts(clear = true))
 
-    val holder = ServingIndex.open(spark, idx, () => warmLoad(idx))
+    val holder = ServingIndex.open(spark, idx, () => servingLoad(spark, idx))
     assert(hits(holder.current, "glacier").isEmpty)
 
     val delta = Files.createTempDirectory("reload-delta").toString
@@ -115,6 +108,29 @@ class ServeReloadSpec extends AnyFunSuite {
     assert(hits(holder.current, "glacier").nonEmpty)
     assert(holder.current.pendingSegments == 1)
     assert(!holder.checkAndReload())
+    holder.current.uncacheAll(); ServeSearch.releaseScored(holder.current)
+  }
+
+  test("a settings-only rewrite (new analyzer) reloads, and the served " +
+      "instance reads the new value from its fresh settings snapshot") {
+    val dir = Files.createTempDirectory("reload-settings").toString
+    IndexData.write(docsDf(Seq("d1" -> "spark runs fast")),
+      Seq(Setting("embedding_model", "test"), Setting("analyzer", "default")).toDF(),
+      dir)
+    val holder = ServingIndex.open(spark, dir, () => servingLoad(spark, dir))
+    val before = holder.current
+    // force the snapshot on the first generation before the rewrite
+    assert(before.setting("analyzer").contains("default"))
+
+    Thread.sleep(5) // commit-marker mtime granularity is ms
+    val updated = before.upsertSetting("analyzer", "whitespace")
+    updated.settings.coalesce(1).write.mode("overwrite").parquet(s"$dir/settings")
+
+    assert(holder.checkAndReload(), "a settings rewrite must move the fingerprint")
+    assert(!(holder.current eq before))
+    assert(holder.current.setting("analyzer").contains("whitespace"))
+    // the released generation keeps the snapshot it was served with
+    assert(before.setting("analyzer").contains("default"))
     holder.current.uncacheAll(); ServeSearch.releaseScored(holder.current)
   }
 
@@ -191,7 +207,7 @@ class ServeReloadSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("reload-stagedcommit").toString
     IndexData.write(docsDf(Seq("d1" -> "spark runs fast")),
       Seq(Setting("embedding_model", "test")).toDF(), dir)
-    val holder = ServingIndex.open(spark, dir, () => warmLoad(dir))
+    val holder = ServingIndex.open(spark, dir, () => servingLoad(spark, dir))
     assert(hits(holder.current, "nebula").isEmpty)
     // simulate writeStagedSwap crashing right after the marker commit: the
     // full staged table set exists under _compact/ with _COMMIT, but no
