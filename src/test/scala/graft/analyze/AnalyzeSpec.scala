@@ -41,43 +41,57 @@ class AnalyzeSpec extends AnyFunSuite {
   }
 
   test("CjkBigramAnalyzer properties hold on the reference sample fixture") {
-    val src = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/sample_docs/sample.md")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val lines = src.split("\n").toSeq.filter(_.nonEmpty)
-    assert(lines.nonEmpty)
-    lines.foreach { line =>
-      val toks = CjkBigramAnalyzer.tokenize(line)
-      // every token is a verbatim substring of the lower-cased source line
-      toks.foreach(t => assert(line.toLowerCase.contains(t), s"'$t' not in '$line'"))
-      // CJK tokens are exactly 1 or 2 code points
-      toks.filter(t => t.exists(_ >= 0x3040)).foreach { t =>
-        val n = t.codePointCount(0, t.length)
-        assert(n == 1 || n == 2, s"CJK token '$t' has $n code points")
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.{Files, Paths}
+    import java.util.Locale
+    def checkFixture(src: String): Unit = {
+      val lines = src.split("\n").toSeq.filter(_.nonEmpty)
+      assert(lines.nonEmpty)
+      lines.foreach { line =>
+        val toks = CjkBigramAnalyzer.tokenize(line)
+        // every token is a verbatim substring of the lower-cased source line
+        // (Locale.ROOT: the analyzer lower-cases per code point, locale-free)
+        toks.foreach(t => assert(line.toLowerCase(Locale.ROOT).contains(t),
+          s"'$t' not in '$line'"))
+        // CJK tokens are exactly 1 or 2 code points
+        toks.filter(t => t.exists(_ >= 0x3040)).foreach { t =>
+          val n = t.codePointCount(0, t.length)
+          assert(n == 1 || n == 2, s"CJK token '$t' has $n code points")
+        }
+        // completeness: EVERY adjacent same-script CJK pair in the line is
+        // emitted as a bigram — no position can be skipped, or a query term
+        // overlapping it could never match
+        val cps = line.codePoints().toArray
+        def cls(cp: Int): Int = {
+          val b = Character.UnicodeBlock.of(cp)
+          if (b == Character.UnicodeBlock.CJK_UNIFIED_IDEOGRAPHS) 1
+          else if (b == Character.UnicodeBlock.HIRAGANA) 2
+          else if (b == Character.UnicodeBlock.KATAKANA) 3
+          else 0
+        }
+        val expected = cps.sliding(2).collect {
+          case Array(a, b) if cls(a) != 0 && cls(a) == cls(b) =>
+            new String(Character.toChars(a)) + new String(Character.toChars(b))
+        }.toSet
+        val tokSet = toks.toSet
+        expected.foreach(bg => assert(tokSet.contains(bg), s"missing bigram '$bg' in '$line'"))
       }
-      // completeness: EVERY adjacent same-script CJK pair in the line is
-      // emitted as a bigram — no position can be skipped, or a query term
-      // overlapping it could never match
-      val cps = line.codePoints().toArray
-      def cls(cp: Int): Int = {
-        val b = Character.UnicodeBlock.of(cp)
-        if (b == Character.UnicodeBlock.CJK_UNIFIED_IDEOGRAPHS) 1
-        else if (b == Character.UnicodeBlock.HIRAGANA) 2
-        else if (b == Character.UnicodeBlock.KATAKANA) 3
-        else 0
-      }
-      val expected = cps.sliding(2).collect {
-        case Array(a, b) if cls(a) != 0 && cls(a) == cls(b) =>
-          new String(Character.toChars(a)) + new String(Character.toChars(b))
-      }.toSet
-      val tokSet = toks.toSet
-      expected.foreach(bg => assert(tokSet.contains(bg), s"missing bigram '$bg' in '$line'"))
+      // the doc's own vocabulary: a user query in reference terms matches
+      val docToks = CjkBigramAnalyzer.tokenize(src).toSet
+      assert(CjkBigramAnalyzer.tokenize("全文検索").forall(docToks.contains))
+      assert(docToks.contains("duckdb"))
     }
-    // the doc's own vocabulary: a user query in reference terms matches
-    val docToks = CjkBigramAnalyzer.tokenize(src).toSet
-    assert(CjkBigramAnalyzer.tokenize("全文検索").forall(docToks.contains))
-    assert(docToks.contains("duckdb"))
+    // the repo's fixture, written to the shape of the reference's
+    // sample_docs/sample.md: H1 + two H2 sections of Japanese prose mixing
+    // kanji, kana, katakana with ー, Latin words, digits and 、。
+    val res = getClass.getResourceAsStream("/graft/analyze/sample.md")
+    assert(res != null, "test resource /graft/analyze/sample.md is missing " +
+      "from the test classpath (src/test/resources/graft/analyze/sample.md)")
+    checkFixture(try new String(res.readAllBytes(), UTF_8) finally res.close())
+    // the reference checkout's own file, wherever it is present
+    val reference = Paths.get("/root/reference/sample_docs/sample.md")
+    if (Files.isRegularFile(reference))
+      checkFixture(new String(Files.readAllBytes(reference), UTF_8))
   }
 
   test("DictionaryAnalyzer: longest match wins; fallback spans bigram-ize; " +
