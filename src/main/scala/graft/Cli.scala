@@ -768,9 +768,8 @@ object Cli {
     * round-19 measured pq:auto at 2.2×/4.4× the exact p50 on 20k/200k
     * incompressible embeddings where the 0.9 target resolves 2560/10240.
     * The serve DEFAULT declines pq:auto past this bound (an explicit
-    * `--ann pq:auto` is still honored — with the advisory below, and the
-    * engine switches its rerank to the broadcast-join shape there). One
-    * constant with the engine-side switch point. */
+    * `--ann pq:auto` is still honored — with the advisory below). One
+    * constant with the engine's rerank-fetch bound. */
   private[graft] val ServeAutoShortlistMax =
     graft.search.HybridSearch.RerankFetchInMax
 

@@ -130,6 +130,18 @@ final case class NormalizingAnalyzer(form: String, inner: Analyzer)
   * boundary (content word → particle/inflection). Latin/digit runs tokenize
   * exactly like [[DefaultAnalyzer]].
   *
+  * Bigrammed script classes ([[scriptClass]]), by Unicode block: CJK
+  * unified ideographs (with Extension A and the compatibility ideographs),
+  * hiragana, katakana, and hangul syllables. Every other letter or digit
+  * joins a lower-cased Latin run, so these are NOT bigrammed: the
+  * iteration mark `々` (`時々abc` → `時`, `々abc`), half-width katakana
+  * (`ｶﾀｶﾅ検索` → `ｶﾀｶﾅ`, `検索`), CJK Extension B and later (`𠮷野家` →
+  * `𠮷`, `野家`), and full-width Latin (`ＡＢＣ検索` → `ａｂｃ`, `検索`). A
+  * `norm:NFKC:` analyzer ([[NormalizingAnalyzer]]) folds the half-width
+  * and full-width forms first — half-width katakana to katakana,
+  * full-width Latin to ASCII — so under it those two cases tokenize as
+  * their standard forms.
+  *
   * Pluggable, not the default: tokens are data (SURVEY.md §7.4) — an index
   * built with one analyzer must be searched with the same one, and the
   * oracle-checked corpus surface stays on whitespace tokens.

@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** The engine's single `spark.sql.extensions` entry point: native SQL
   * functions, the [[graft.plans.CosineKnnStrategy]] planner strategy, and
@@ -21,41 +23,32 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.CosineKnnStrategy)
     e.injectOptimizerRule(_ => graft.plans.AnnTopKRewrite)
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_distance"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[CosineDistance].getName, "cosine_distance"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          CosineDistance(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[DotProduct].getName, "dot_product"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          DotProduct(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("topk_desc"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[TopKDesc].getName, "topk_desc"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          TopKDesc(exprs(0), GraftExtensions.topkK(exprs(1)))
-            .toAggregateExpression()))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("unicode_normalize"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[UnicodeNormalize].getName, "unicode_normalize"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          UnicodeNormalize(exprs(0), GraftExtensions.normForm(exprs))))
+    GraftExtensions.Functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
   }
 }
 
 object GraftExtensions {
+  /** The engine's SQL functions as (name, expression class, builder): the
+    * one list both install paths iterate — [[GraftExtensions.apply]] at
+    * session build, [[register]] on a live session. */
+  private val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("cosine_distance", classOf[CosineDistance],
+      exprs => CosineDistance(exprs(0), exprs(1))),
+    ("dot_product", classOf[DotProduct],
+      exprs => DotProduct(exprs(0), exprs(1))),
+    ("topk_desc", classOf[TopKDesc],
+      exprs => TopKDesc(exprs(0), topkK(exprs(1))).toAggregateExpression()),
+    ("unicode_normalize", classOf[UnicodeNormalize],
+      exprs => UnicodeNormalize(exprs(0), normForm(exprs))))
+
   /** Resolve `topk_desc`'s k argument: must be a foldable non-null integer
     * — checked HERE so misuse surfaces as one clear error naming the
     * requirement, instead of an internal Unevaluable (column k),
     * ClassCastException (string k), or NPE (NULL k) from a raw eval. */
-  private[functions] def topkK(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Int = {
+  private[functions] def topkK(e: Expression): Int = {
     require(e.foldable,
       s"topk_desc(expr, k): k must be an integer literal, got expression ${e.sql}")
     e.eval() match {
@@ -69,8 +62,7 @@ object GraftExtensions {
   /** Resolve `unicode_normalize`'s optional form argument (2nd, default
     * NFKC): must be a foldable non-null string — same clear-error contract
     * as [[topkK]]. */
-  private[functions] def normForm(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): String = {
+  private[functions] def normForm(exprs: Seq[Expression]): String = {
     require(exprs.lengthCompare(2) <= 0,
       s"unicode_normalize(s[, form]) takes 1 or 2 arguments, got ${exprs.length}")
     if (exprs.lengthCompare(2) < 0) "NFKC"
@@ -88,17 +80,9 @@ object GraftExtensions {
   }
 
   /** Register on an already-built session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_distance", exprs => CosineDistance(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_desc",
-      exprs => TopKDesc(exprs(0), topkK(exprs(1))).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unicode_normalize",
-      exprs => UnicodeNormalize(exprs(0), normForm(exprs)), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    Functions.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
+    }
 }

@@ -124,111 +124,10 @@ final case class IndexData(
     val updated = IndexData.upsertSettings(
         settings, Seq((key, value)).toDF("key", "value"))
       // materialize: the lineage reads $dir/settings, which a subsequent
-      // save(dir) overwrites — read-before-overwrite needs a checkpoint
-      // (settings is a handful of rows)
+      // IndexData.write(…, dir) overwrites — read-before-overwrite needs a
+      // checkpoint (settings is a handful of rows)
       .localCheckpoint(true)
     copy(settings = updated)
-  }
-
-  /** Persist an artifact whose DataFrames are already cheap to recompute (or
-    * cached). For artifacts rooted in an expensive pipeline (chunk + embed),
-    * use [[IndexData.write]] — it materializes documents ONCE and derives
-    * the stats tables from the written parquet instead of re-running the
-    * upstream lineage per dataset. */
-  def save(dir: String, clusterById: Boolean = true): Unit = {
-    // a LIVE destination (committed artifact already present) routes
-    // through the same staged swap as [[IndexData.write]] — see there for
-    // the torn-read rationale (round-15 directive: library misuse made safe)
-    val spark = settings.sparkSession
-    if (IndexData.isCommittedArtifact(spark, dir)) {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val staging = s"$dir/${IndexData.CompactStagingDir}"
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      saveInto(staging, clusterById)
-      // ann/pq are DERIVED from documents like positions, so a swap that
-      // left the live dir's sidecars in place would pair them with the new
-      // base — stale/dead doc_ids silently served by `--ann` (round-16
-      // ADVICE). Refresh them into staging under the frozen models (the
-      // same incremental contract compact uses); when that is impossible
-      // (no embedding column, dim drift) the commit records the omission
-      // and the swap retires them — `--ann` then degrades loudly to the
-      // exact scan instead of answering from a dead corpus.
-      IndexData.stageFrozenSidecars(spark, dir, staging)
-      IndexData.commitStagedSwap(spark, dir)
-    } else saveInto(dir, clusterById)
-  }
-
-  private def saveInto(dir: String, clusterById: Boolean): Unit = {
-    // doc_id-clustered documents files (same rationale as the postings
-    // layout below, for the doc-keyed scans): doc_ids are content-addressed
-    // — uniform-random — so an unclustered write gives every file/row-group
-    // full-range doc_id min/max stats and the serving candidate fetch's
-    // pushed `In(doc_id, …)` ([[graft.search.ServeSearch]]) prunes NOTHING:
-    // each request scans the corpus. Range-clustered + sorted, the fetch
-    // touches only the row groups holding its ≤k·legs candidate ids —
-    // corpus-size-flat once files exceed one parquet block. (The reference
-    // gets this for free: its ULIDs are time-ordered, `src/indexer.py:
-    // 105-107`, so DuckDB zonemaps prune the IN fetch.) save()'s documents
-    // are cheap to recompute per its contract, so the range sampling pass
-    // is fine here; expensive lineages go through [[IndexData.write]],
-    // which stages raw first. `clusterById = false` preserves a caller-
-    // provided layout (e.g. an SFC clustering) — the same escape hatch
-    // [[IndexData.write]] has, so the two writers agree on the invariant.
-    if (clusterById) IndexData.writeDocsClustered(documents, s"$dir/documents")
-    else documents.write.mode("overwrite").parquet(s"$dir/documents")
-    // Carried stats frames must hold every carry column documents provides:
-    // load() strips postings/doclen/positions to their serving projections
-    // (no file_path), so persisting a LOADED instance's frames verbatim
-    // would write a base whose stats rows cannot be tombstone-masked — the
-    // next append merge refuses (doclen/postings) or the next load throws
-    // on the segment union (positions; round-16 ADVICE). Re-derive from
-    // documents whenever the carry is incomplete — same cheap-to-recompute
-    // contract as the rest of save().
-    val carry =
-      if (documents.columns.contains("file_path")) Seq("file_path") else Nil
-    def carryComplete(df: DataFrame): Boolean = carry.forall(df.columns.contains)
-    val postingsOut =
-      if (carryComplete(postings)) postings
-      else Bm25.postings(documents, carry = carry, withDl = true)
-    val doclenOut =
-      if (carryComplete(doclen)) doclen
-      else Bm25.docLengths(documents, carry = carry)
-    // Partition postings by term hash AND sort within files by term: the
-    // clustering co-locates a term's rows in one file, and the sort gives
-    // every parquet row group tight term min/max stats — so the serving
-    // path's pushed `In(term, …)` filter ([[graft.search.Bm25.scores]])
-    // prunes the read to just the query's posting lists instead of
-    // scanning the corpus-proportional table.
-    postingsOut.repartition(col("term")).sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(s"$dir/postings")
-    // term-clustered termdf: cold-term df lookups prune (see [[write]])
-    termdf.repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$dir/termdf")
-    doclenOut.write.mode("overwrite").parquet(s"$dir/doclen")
-    stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    settings.coalesce(1).write.mode("overwrite").parquet(s"$dir/settings")
-    // positional sidecar — written unless the artifact opts out (settings
-    // `positions=off`, [[IndexData.positionsEnabled]]): positions are
-    // DERIVED from documents, so a staged swap whose staging lacked them
-    // would leave the PREVIOUS base's positions in place — stale phrase
-    // results against the new corpus. Opt-out absence is safe because the
-    // committer records the intentional omission in the `_COMMIT` marker
-    // and the swap retires the old sidecar ([[commitStagedSwap]]); a bare
-    // delete-when-missing could not distinguish "absent by choice" from
-    // "already swapped mid-crash-replay". Same term-clustered layout as
-    // postings so phrase probes prune.
-    if (IndexData.positionsEnabled(settings)) {
-      val pos = positions.filter(carryComplete)
-        .getOrElse(Bm25.positionalPostings(documents, carry = carry))
-      // EXPLICIT partition count: without it AQE coalesces the tiny-range
-      // shuffle to one near-full-range file and term pruning has nothing
-      // to prune (same rule as writeDocsClustered's explicit parts)
-      val n = pos.sparkSession.sessionState.conf.numShufflePartitions
-      pos.repartitionByRange(n, col("term"))
-        .sortWithinPartitions("term", "doc_id", "pos")
-        .write.mode("overwrite").parquet(s"$dir/${IndexData.PositionsDir}")
-    }
   }
 }
 
@@ -250,59 +149,48 @@ object IndexData {
     * the re-read parquet — the chunk/embed pipeline executes exactly once
     * instead of once per derived dataset. The stats rows carry `file_path`
     * (when documents has it) so later append-merge segments can mask
-    * replaced rows without a join back to documents. */
+    * replaced rows without a join back to documents.
+    *
+    * A LIVE destination — the dir already holds a COMMITTED artifact —
+    * routes through [[writeStagedSwap]]: overwriting table dirs in place one
+    * at a time would let a concurrent reader (or a crash mid-write) pair new
+    * documents with old termdf — a torn table set. `refreshSidecars`: a
+    * direct write-on-live has no post-swap sidecar rebuild step (unlike the
+    * engine's rewrite merges), so stale ann/pq rows from the old corpus must
+    * be refreshed or retired by the swap itself. */
   def write(documents: DataFrame, settings: DataFrame, dir: String,
       clusterById: Boolean = true): IndexData = {
     val spark = documents.sparkSession
-    // a LIVE destination — the dir already holds a COMMITTED artifact —
-    // routes through the staged swap (round-15 directive #4): the in-place
-    // path overwrites table dirs one at a time, so a concurrent reader (or
-    // a crash mid-write) could pair new documents with old termdf — a torn
-    // table set. Engine writers (compact, rewrite merges) already stage;
-    // this closes the last surface, direct library calls onto a live dir.
-    // No recursion: writeStagedSwap deletes the staging dir before writing
-    // into it, so the inner write never sees a committed artifact there.
     if (isCommittedArtifact(spark, dir))
-      // refreshSidecars: a direct write-on-live has no post-swap sidecar
-      // rebuild step (unlike the engine's rewrite merges), so stale ann/pq
-      // rows from the old corpus must be refreshed or retired by the swap
-      // itself (round-16 ADVICE)
-      return writeStagedSwap(documents, settings, dir, clusterById,
-        refreshSidecars = true)
-    if (clusterById) {
-      // doc_id-clustered files (see [[IndexData.save]] for the full why:
-      // content-addressed ids are uniform-random, so without this layout
-      // the serving fetch's pushed `In(doc_id, …)` reads the whole corpus
-      // per request). Staged: the expensive chunk+embed lineage executes
-      // exactly ONCE into the raw dir; the clustering pass — and
-      // repartitionByRange's range-bounds sampling job — reads the staged
-      // parquet, never the lineage. The partition count is sized from the
-      // STAGED BYTES (floored at the session's shuffle parallelism), not
-      // left to the ambient shuffle.partitions: at 100 TB a fixed count
-      // would mean corpus/count-sized files regardless of config, and a
-      // bounded row-group size caps what one candidate id costs to fetch.
-      val raw = s"$dir/$DocsRawDir"
-      documents.write.mode("overwrite").parquet(raw)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val rawBytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(raw)).getLength
-      val parts = math.max(spark.sessionState.conf.numShufflePartitions,
-        math.ceil(rawBytes.toDouble / DocTargetFileBytes).toInt)
-      writeDocsClustered(spark.read.parquet(raw), s"$dir/documents", Some(parts))
-      fs.delete(new org.apache.hadoop.fs.Path(raw), true)
-    } else {
-      // caller-provided layout (e.g. a space-filling-curve clustering on
-      // (file_path, line_start)) — preserve it as written
-      documents.write.mode("overwrite").parquet(s"$dir/documents")
+      writeStagedSwap(documents, settings, dir, clusterById, refreshSidecars = true)
+    else {
+      writeTables(documents, settings, dir, clusterById)
+      load(spark, dir)
     }
+  }
+
+  /** The canonical table set, written into `dir` — a fresh artifact dir or
+    * a staged swap's staging dir. `clusterById = false` preserves a
+    * caller-provided documents layout (e.g. a space-filling-curve
+    * clustering on (file_path, line_start)) as written. */
+  private def writeTables(documents: DataFrame, settings: DataFrame, dir: String,
+      clusterById: Boolean): Unit = {
+    val spark = documents.sparkSession
+    if (clusterById)
+      writeDocsClustered(documents, dir, spark.sessionState.conf.numShufflePartitions)
+    else documents.write.mode("overwrite").parquet(s"$dir/documents")
     val docsOnDisk = spark.read.parquet(s"$dir/documents")
     val carry = if (docsOnDisk.columns.contains("file_path")) Seq("file_path") else Nil
     val doclen = Bm25.docLengths(docsOnDisk, carry = carry)
     // dl denormalized into the artifact's postings (withDl): the serving
     // FTS leg then needs no doclen join — see [[Bm25.postings]]
     val postings = Bm25.postings(docsOnDisk, carry = carry, withDl = true)
-    // term-clustered + term-sorted files: see [[IndexData.save]] — this is
-    // what lets the pushed In(term, …) probe prune row groups at serve time
+    // partitioned by term hash AND sorted within files by term: the
+    // clustering co-locates a term's rows in one file, and the sort gives
+    // every parquet row group tight term min/max stats — so the serving
+    // path's pushed `In(term, …)` filter ([[graft.search.Bm25.scores]])
+    // prunes the read to just the query's posting lists instead of
+    // scanning the corpus-proportional table
     postings.repartition(col("term")).sortWithinPartitions("term", "doc_id")
       .write.mode("overwrite").parquet(s"$dir/postings")
     // termdf range-clustered + sorted by term: the serving session's
@@ -337,11 +225,11 @@ object IndexData {
     doclen.write.mode("overwrite").parquet(s"$dir/doclen")
     Bm25.corpusStats(doclen).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
     settings.coalesce(1).write.mode("overwrite").parquet(s"$dir/settings")
-    load(spark, dir)
   }
 
-  /** [[write]] with compaction-grade atomicity, for REWRITES of an
-    * artifact that may be live (round-15): the full table set stages under
+  /** The one commit path for REWRITES of an artifact that may be live —
+    * [[write]] onto a committed dir, the rewrite merges and
+    * `IndexJob.compact` (round-15): the full table set stages under
     * [[CompactStagingDir]], commits via [[CompactCommitMarker]], and swaps
     * through the same idempotent [[finishCompactSwap]] every reader already
     * heals. Pre-round-15 the rewrite path overwrote each table dir in
@@ -355,11 +243,12 @@ object IndexData {
     * staged here by default): rewrite callers rebuild them after the swap,
     * and a crash in that window degrades `--ann` to the exact scan or to
     * frozen-model lists — acceleration staleness, never corruption.
-    * `refreshSidecars = true` (the direct write-on-live routing, which has
-    * NO post-swap rebuild step) instead stages a frozen-model sidecar
-    * refresh over the new documents ([[stageFrozenSidecars]]); when the
-    * refresh is impossible the commit records the omission and the swap
-    * retires the stale dirs (round-16 ADVICE). */
+    * `refreshSidecars = true` (the direct write-on-live routing and
+    * compact, which have NO post-swap rebuild step) instead stages a
+    * frozen-model sidecar refresh over the new documents
+    * ([[stageFrozenSidecars]]); when the refresh is impossible the commit
+    * records the omission and the swap retires the stale dirs (round-16
+    * ADVICE). */
   def writeStagedSwap(documents: DataFrame, settings: DataFrame,
       indexDir: String, clusterById: Boolean = true,
       refreshSidecars: Boolean = false): IndexData = {
@@ -368,11 +257,7 @@ object IndexData {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = s"$indexDir/$CompactStagingDir"
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    // the trailing load() inside write() sees the STAGING dir — segment-
-    // free by construction, so the old "delete seg/ before write or the
-    // load assembles new base ∪ old segments" ordering hazard is gone
-    // structurally, not by ordering discipline
-    write(documents, settings, staging, clusterById)
+    writeTables(documents, settings, staging, clusterById)
     if (refreshSidecars) stageFrozenSidecars(spark, indexDir, staging)
     commitStagedSwap(spark, indexDir,
       // without a refresh the live sidecars are the CALLER's to rebuild
@@ -416,7 +301,7 @@ object IndexData {
     * drifted from the frozen model — cleans its partial staging dirs and
     * leaves the sidecars unstaged; [[commitStagedSwap]] then records the
     * omission so the swap retires the stale live dirs instead. */
-  private[graft] def stageFrozenSidecars(spark: SparkSession,
+  private def stageFrozenSidecars(spark: SparkSession,
       liveDir: String, staging: String): Unit = {
     val liveAnn = AnnIndex.load(spark, liveDir)
     val livePq = PqIndex.load(spark, liveDir)
@@ -476,7 +361,7 @@ object IndexData {
     * delete-when-missing would delete a just-renamed table on replay.
     * `keep` names dirs the caller rebuilds AFTER the swap (the rewrite
     * merges' ann/pq) — never recorded as drops. */
-  private[graft] def commitStagedSwap(spark: SparkSession, dir: String,
+  private def commitStagedSwap(spark: SparkSession, dir: String,
       keep: Set[String] = Set.empty): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -505,7 +390,7 @@ object IndexData {
 
   /** Whether `dir` already holds a COMMITTED artifact (settings `_SUCCESS`
     * present — the same liveness rule [[load]] enforces). Gates the
-    * write-on-live staged-swap routing in [[write]]/[[IndexData.save]]. */
+    * write-on-live staged-swap routing in [[write]]. */
   private[graft] def isCommittedArtifact(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir, "settings/_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -645,10 +530,10 @@ object IndexData {
     * filesystem cannot hold disk-backed serve startup hostage. */
   val PrewarmTimeoutSec = 60L
 
-  /** Staging dir for [[write]]'s one-pass-lineage documents write; a
-    * leftover from a crash is never read by [[load]] (which opens named
-    * table dirs only) and is overwritten then deleted by the next write.
-    * Deliberately NOT underscore-prefixed: Spark's file index treats
+  /** Staging dir for [[writeDocsClustered]]'s one-pass-lineage documents
+    * write; a leftover from a crash is never read by [[load]] (which opens
+    * named table dirs only) and is overwritten then deleted by the next
+    * write. Deliberately NOT underscore-prefixed: Spark's file index treats
     * `_`/`.`-prefixed paths as metadata and warns/ignores them on read. */
   val DocsRawDir = "documents_raw"
 
@@ -661,26 +546,50 @@ object IndexData {
     * efficient sequential reads and page-compressed encoding). */
   val DocRowGroupBytes: Long = 16L * 1024 * 1024
 
-  /** Target documents file size for [[write]]'s size-based partition count
-    * — keeps file count ∝ corpus bytes (metadata-light at small corpora,
-    * never corpus/shuffle.partitions-sized giants at 100 TB). */
+  /** Target documents file size for [[writeDocsClustered]]'s size-based
+    * partition count — keeps file count ∝ corpus bytes (metadata-light at
+    * small corpora, never corpus/shuffle.partitions-sized giants at
+    * 100 TB). */
   val DocTargetFileBytes: Long = 256L * 1024 * 1024
 
-  /** THE doc_id-clustered documents write — range-clustered, sorted within
-    * files, bounded row groups. This is the layout invariant the serving
-    * fetch's pruning depends on (DocFetchPruneSpec), so every documents
-    * writer (base [[write]], [[IndexData.save]], append segments) routes
-    * through this one definition. `parts = None` leaves the partition
-    * count to the session (small cheap-lineage artifacts). */
-  private[graft] def writeDocsClustered(df: DataFrame, dest: String,
-      parts: Option[Int] = None): Unit = {
-    val ranged = parts match {
-      case Some(n) => df.repartitionByRange(n, col("doc_id"))
-      case None => df.repartitionByRange(col("doc_id"))
-    }
-    ranged.sortWithinPartitions("doc_id")
+  /** THE doc_id-clustered documents write of the base ([[write]]) and of
+    * append segments: `df` lands in `dir/documents` range-clustered by
+    * doc_id, sorted within files, with bounded row groups. doc_ids are
+    * content-addressed — uniform-random — so an unclustered write gives
+    * every file/row-group full-range doc_id min/max stats and the serving
+    * candidate fetch's pushed `In(doc_id, …)` ([[graft.search.ServeSearch]])
+    * prunes NOTHING: each request scans the corpus. Clustered, the fetch
+    * touches only the row groups holding its ≤k·legs candidate ids
+    * (DocFetchPruneSpec). The reference gets this for free: its ULIDs are
+    * time-ordered, `src/indexer.py:105-107`, so DuckDB zonemaps prune the
+    * IN fetch.
+    *
+    * Staged: the expensive chunk+embed lineage executes exactly ONCE into
+    * `dir/documents_raw`; the clustering pass — and repartitionByRange's
+    * range-bounds sampling job — reads the staged parquet, never the
+    * lineage. The part count is sized from the STAGED BYTES,
+    * `max(minParts, ceil(rawBytes / DocTargetFileBytes))`, not left to the
+    * ambient shuffle.partitions: at 100 TB a fixed count would mean
+    * corpus/count-sized files regardless of config, and a bounded file
+    * size caps what one candidate id costs to fetch. The base floors it at
+    * the session's shuffle parallelism; segments floor it at 1, because
+    * they accumulate between compactions and a tiny delta must not
+    * fragment into shuffle.partitions near-empty files. Returns the part
+    * count. */
+  private[graft] def writeDocsClustered(df: DataFrame, dir: String, minParts: Int): Int = {
+    val spark = df.sparkSession
+    val raw = s"$dir/$DocsRawDir"
+    df.write.mode("overwrite").parquet(raw)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rawBytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(raw)).getLength
+    val parts = math.max(minParts, math.ceil(rawBytes.toDouble / DocTargetFileBytes).toInt)
+    spark.read.parquet(raw).repartitionByRange(parts, col("doc_id"))
+      .sortWithinPartitions("doc_id")
       .write.option("parquet.block.size", DocRowGroupBytes.toString)
-      .mode("overwrite").parquet(dest)
+      .mode("overwrite").parquet(s"$dir/documents")
+    fs.delete(new org.apache.hadoop.fs.Path(raw), true)
+    parts
   }
 
   /** Cheap on-disk fingerprint of an artifact's committed state, for the
@@ -734,7 +643,7 @@ object IndexData {
   val CompactStagingDir = "_compact"
   val CompactCommitMarker = "_COMMIT"
 
-  /** Complete a committed compaction swap. `IndexJob.compact` writes the
+  /** Complete a committed staged swap. [[writeStagedSwap]] writes the
     * full staging artifact under `_compact/`, then drops the `_COMMIT`
     * marker, then swaps table directories into place — a crash mid-swap
     * would tear the artifact, so the swap is IDEMPOTENT and any reader

@@ -357,15 +357,16 @@ object IndexJob {
     // STAGED ATOMIC REWRITE (round-15, [[IndexData.writeStagedSwap]]):
     // write-then-derive into the compaction staging dir, commit by marker,
     // swap. This retires TWO hazards the old in-place overwrite carried:
-    // (a) the round-14 ordering bug class — the trailing load() now reads
-    // the segment-free STAGING dir, so "new base ∪ old segments" cannot
-    // be assembled by construction (the old fix deleted seg/ first, which
-    // traded the brick for hazard b); (b) crash durability — deleting
-    // seg/ before the base that folds it exists LOSES the appended docs
-    // on a crash mid-write, and the in-place per-table overwrites could
-    // tear the artifact (new documents + old termdf). Staged, a crash
-    // before the marker leaves the live artifact byte-untouched, and the
-    // committed swap retires seg/ atomically with the new base.
+    // (a) the round-14 ordering bug class — the new base is written into
+    // the segment-free STAGING dir and the swap retires seg/ with it, so
+    // "new base ∪ old segments" cannot be assembled by construction (the
+    // old fix deleted seg/ first, which traded the brick for hazard b);
+    // (b) crash durability — deleting seg/ before the base that folds it
+    // exists LOSES the appended docs on a crash mid-write, and the
+    // in-place per-table overwrites could tear the artifact (new
+    // documents + old termdf). Staged, a crash before the marker leaves
+    // the live artifact byte-untouched, and the committed swap retires
+    // seg/ atomically with the new base.
     // Default layout is doc_id-range-clustered (the serving fetch's
     // pruning unit); an explicit --layout keeps its SFC clustering.
     val written = IndexData.writeStagedSwap(laidOut, mergedSettings, indexDir,
@@ -465,25 +466,11 @@ object IndexJob {
         s"from the append")
     val segN = IndexData.segments(spark, indexDir).lastOption.map(_._1 + 1).getOrElse(1)
     val segDir = s"$indexDir/${IndexData.SegDir}/$segN"
-    // segment documents first: the expensive chunk+embed lineage executes
-    // exactly once (into the raw staging dir), and everything below derives
-    // from the written parquet. The segment is then rewritten doc_id-
-    // clustered — the serving fetch reads the LIVE view (base ∪ segments),
-    // so the pruning invariant of the base layout ([[IndexData.write]])
-    // must hold for segment files too; O(delta)-cheap.
-    val rawSeg = s"$segDir/${IndexData.DocsRawDir}"
-    fresh.write.mode("overwrite").parquet(rawSeg)
-    val fsSeg = new org.apache.hadoop.fs.Path(segDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // size-based partition count WITHOUT the base write's parallelism floor:
-    // segments accumulate between compactions, so a tiny delta must not
-    // fragment into shuffle.partitions near-empty files each
-    val segBytes = fsSeg.getContentSummary(new org.apache.hadoop.fs.Path(rawSeg)).getLength
-    val segParts = math.max(1,
-      math.ceil(segBytes.toDouble / IndexData.DocTargetFileBytes).toInt)
-    IndexData.writeDocsClustered(spark.read.parquet(rawSeg),
-      s"$segDir/documents", Some(segParts))
-    fsSeg.delete(new org.apache.hadoop.fs.Path(rawSeg), true)
+    // segment documents first, doc_id-clustered like the base: the serving
+    // fetch reads the LIVE view (base ∪ segments), so the base layout's
+    // pruning invariant must hold for segment files too; O(delta)-cheap.
+    // Floor of 1 part: see [[IndexData.writeDocsClustered]]
+    val segParts = IndexData.writeDocsClustered(fresh, segDir, minParts = 1)
     val segDocs = spark.read.parquet(s"$segDir/documents")
     // pre-merge live view — segments() can't see this segment yet (its
     // tombstones, the commit marker, don't exist until the end)
@@ -498,7 +485,7 @@ object IndexJob {
       .write.mode("overwrite").parquet(s"$segDir/doclen")
     // segment postings are O(delta)-small but share the serving probe with
     // the base: sort within files by term so the pushed In(term, …) filter
-    // prunes their row groups too (base layout: IndexData.save). withDl —
+    // prunes their row groups too (base layout: IndexData.write). withDl —
     // the live view unions base and segment postings, so the schemas must
     // agree (gated above for legacy bases)
     Bm25.postings(segDocs, carry = carry, withDl = true)
@@ -617,37 +604,19 @@ object IndexJob {
   def compact(spark: SparkSession, indexDir: String,
       layout: String = "none", layoutFiles: Int = 8): IndexData = {
     val live = IndexData.load(spark, indexDir)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = s"$indexDir/${IndexData.CompactStagingDir}"
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     val docs =
       if (layout == "none") live.documents
       else graft.ops.Layout.cluster(live.documents, layout, "file_path", "line_start", layoutFiles)
-    // live lineage reads base + segments; it writes into the staging dir,
-    // so there is no read-before-overwrite hazard and no corpus-sized
-    // driver materialization
-    IndexData.write(docs, live.settings.localCheckpoint(true), staging,
-      clusterById = layout == "none")
-    // sidecars are staged too, rebuilt over the folded corpus under the
-    // FROZEN models (the standard incremental contract — compact is a
-    // merge, not a re-fit), so the whole artifact swaps behind one marker:
-    // a crash can never pair the folded base with sidecars that covered
-    // only the old base. Shared with the direct write-on-live routing
-    // ([[IndexData.stageFrozenSidecars]]).
-    IndexData.stageFrozenSidecars(spark, indexDir, staging)
-    // commit point: the swap tears the artifact if interrupted, so it only
-    // begins once the marker exists — from here any reader that finds the
-    // marker completes the SAME idempotent swap
-    // ([[IndexData.finishCompactSwap]], run by [[IndexData.load]]) before
-    // reading. Before the marker a crash just leaves dead staging files.
-    // The marker also records any swap-managed dir staging deliberately
-    // omitted (e.g. positions on an opt-out artifact) so the swap retires
-    // a stale live copy instead of resurrecting it.
-    IndexData.commitStagedSwap(spark, indexDir)
-    // staleness bookkeeping over the compacted corpus (post-swap; a crash
-    // before this leaves the metrics one fold stale — advisory only)
-    updateDriftSettings(spark, indexDir, IndexData.load(spark, indexDir))
+    // the live lineage reads base + segments and writes into the staging
+    // dir, so there is no read-before-overwrite hazard. refreshSidecars:
+    // the ann/pq sidecars are rebuilt over the folded corpus under the
+    // FROZEN models (compact is a merge, not a re-fit) and swap behind the
+    // same marker, so a crash can never pair the folded base with sidecars
+    // that covered only the old base. The drift bookkeeping runs post-swap
+    // (a crash before it leaves the metrics one fold stale — advisory only)
+    updateDriftSettings(spark, indexDir,
+      IndexData.writeStagedSwap(docs, live.settings.localCheckpoint(true), indexDir,
+        clusterById = layout == "none", refreshSidecars = true))
   }
 
   /** Fit + persist the PQ sidecar over an already-written artifact (the

@@ -108,7 +108,7 @@ object Bm25 {
     * The query-term restriction is an `isin` FILTER, not a join: a literal
     * IN-list pushes to the parquet scan as `PushedFilters: [In(term, …)]`,
     * and because the artifact writes postings term-clustered AND term-sorted
-    * within files ([[graft.index.IndexData.save]]), parquet row-group
+    * within files ([[graft.index.IndexData.write]]), parquet row-group
     * min/max stats prune the read to just the query's terms — the inverted-
     * index probe semantics of the reference (`src/db.py:143-150`: an FTS
     * probe touches only the query's posting lists), where a broadcast join

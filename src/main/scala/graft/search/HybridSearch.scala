@@ -189,17 +189,14 @@ object HybridSearch {
       .limit(k)
   }
 
-  /** Max shortlist the serving engine fetches via a pushed `doc_id IN (…)`
-    * scan; above it [[ServeSearch]] switches the rerank to the
-    * broadcast-join DAG shape ([[vssTopKPq]]/[[vssTopKIvfPq]]) instead.
-    * Past ~200 scattered ids the pushed In degrades to a range filter
-    * that reads ~every row group (FetchProbe round-15: a 500-id fetch
-    * touched 84.9%), so collecting thousands of ids and building a
-    * thousands-of-literals predicate buys nothing — wall is the same
-    * either way (PqServeProbe round-19 measured the switch at parity);
-    * the broadcast shape is kept above the bound for structure, not
-    * speed: no giant In to build/push/evaluate, no ids round-trip. Same
-    * rows either way — ServeSearchSpec pins bit-equality. */
+  /** Largest PQ shortlist whose exact rerank fetch still prunes. The
+    * serving engine ([[ServeSearch]]) reranks every shortlist through a
+    * pushed `doc_id IN (…)` scan; past ~200 scattered ids that In degrades
+    * to a range filter that reads ~every row group (FetchProbe round-15: a
+    * 500-id fetch touched 84.9%), so a larger shortlist pays an
+    * effectively-full rerank scan on top of the codes scan. The serve
+    * default declines `pq:auto` resolutions above this bound
+    * (`Cli.ServeAutoShortlistMax`). */
   val RerankFetchInMax = 256
 
   /** VSS leg through the persisted PQ codes — the two-stage production ANN

@@ -165,32 +165,7 @@ object ServeSearch {
     val vssF: Future[Seq[(String, Double)]] = queryVec match {
       case Some(q) if !q.exists(_ != 0.0f) => Future.successful(Seq.empty)
       case Some(qvec) => Future {
-        if (opts.annPqShortlist > HybridSearch.RerankFetchInMax) {
-          // LARGE shortlist (an incompressible-corpus pq:auto resolution):
-          // run the single-DAG broadcast-join rerank instead of collecting
-          // thousands of ADC ids and building a thousands-of-literals
-          // pushed-In predicate. Measured HONESTLY (PqServeProbe round-19,
-          // before vs after this switch): wall is UNCHANGED — past the
-          // pruned-fetch regime the cost is the shortlist itself (the
-          // TakeOrdered driver merge plus an effectively-full rerank scan,
-          // 2.2×/4.4× the exact scan either way; hence the serve default
-          // declines pq:auto there). The switch buys structure, not speed:
-          // no giant In expression to build/push/evaluate per row group,
-          // no ids round-trip through the driver. Same rows as the
-          // small-shortlist branch (ServeSearchSpec pins the switch).
-          val pq = index.pq.getOrElse(sys.error(
-            "--ann pq requires an index built with --pq-codes (no ann_pq_codebooks in artifact)"))
-          val leg =
-            if (opts.annNprobe > 0) {
-              val ann = index.ann.getOrElse(sys.error(
-                "--ann ivf+pq requires an index built with --ann-clusters"))
-              HybridSearch.vssTopKIvfPq(ann, pq, index.documents, qvec,
-                opts.k, opts.annNprobe, opts.annPqShortlist)
-            } else HybridSearch.vssTopKPq(pq, index.documents, qvec,
-              opts.k, opts.annPqShortlist)
-          leg.select(col("doc_id"), col("vss_score"))
-            .as[(String, Double)].collect().toSeq
-        } else if (opts.annPqShortlist > 0) {
+        if (opts.annPqShortlist > 0) {
           // PQ serving tail, bounded-job shape: the batch adcRerank
           // broadcast-joins the shortlist back into the documents scan —
           // an extra broadcast-exchange job wave per request. Here the

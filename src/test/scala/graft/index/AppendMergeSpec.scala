@@ -101,6 +101,10 @@ class AppendMergeSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/seg/1/documents")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/seg/2/documents")))
+    Seq(1, 2).foreach { n =>
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/seg/$n/${IndexData.DocsRawDir}")),
+        s"seg/$n: the raw documents stage must be deleted once documents are clustered")
+    }
     val baseDocs = spark.read.parquet(s"$idx/documents")
     val basePaths = baseDocs.select("file_path").distinct()
       .collect().map(_.getString(0)).toSet

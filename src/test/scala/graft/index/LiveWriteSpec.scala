@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.core.Schemas.Setting
 
-/** Round-15 directive #4: a direct `IndexData.write`/`save` onto a LIVE
-  * artifact (a dir already holding a committed table set) must not tear it.
-  * Engine writers (compact, rewrite merges) stage+swap since round 15; the
-  * remaining hazard was library misuse — calling the plain writers on a dir
-  * a serving session is reading. Both now detect the committed artifact and
-  * route through the same `writeStagedSwap` machinery, so a failure (or
+/** Round-15 directive #4: a direct `IndexData.write` onto a LIVE artifact
+  * (a dir already holding a committed table set) must not tear it. Engine
+  * writers (compact, rewrite merges) stage+swap since round 15; the
+  * remaining hazard was library misuse — calling the plain writer on a dir
+  * a serving session is reading. It now detects the committed artifact and
+  * routes through the same `writeStagedSwap` machinery, so a failure (or
   * crash) anywhere before the `_COMMIT` marker leaves the original artifact
   * byte-identical, and the swap itself is the idempotent one every reader
   * already heals. */
@@ -84,52 +84,62 @@ class LiveWriteSpec extends AnyFunSuite {
       s"failed write moved the committed fingerprint:\n$before\nvs\n$after")
   }
 
-  test("write and save onto a live artifact stage+swap: the new base lands " +
+  test("write onto a live artifact goes through stage+swap: the new base lands " +
       "atomically and the staging dir is gone") {
     val dir = Files.createTempDirectory("livewrite-swap").toString
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // every file under the artifact that sits in a raw documents stage
+    def rawStageFiles(): Seq[String] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+        .filter(_.contains(s"/${IndexData.DocsRawDir}/")).toSeq
+    }
     IndexData.write(docsDf(Seq("d1" -> "spark runs fast")), settingsDf, dir)
+    assert(rawStageFiles().isEmpty,
+      s"the raw documents stage must be deleted once documents are clustered: ${rawStageFiles()}")
 
     IndexData.write(docsDf(Seq("d2" -> "volcano model", "d3" -> "iterator tree")),
       settingsDf, dir)
     assert(contents(dir) == Set("d2", "d3"))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, IndexData.CompactStagingDir)),
       "staging must be retired by the swap")
+    assert(rawStageFiles().isEmpty, s"raw documents stage left behind: ${rawStageFiles()}")
 
-    // instance save() routes the same way — and with positions STRIPPED
-    // from the instance: save must re-derive and stage them (a swap whose
-    // staging lacked positions would leave the old base's sidecar serving
-    // stale phrase results against the new corpus)
+    // a rewrite from a LOADED instance, with positions STRIPPED from it:
+    // write must re-derive and stage them (a swap whose staging lacked
+    // positions would leave the old base's sidecar serving stale phrase
+    // results against the new corpus)
     val idx = IndexData.load(spark, dir)
     assert(idx.positions.isDefined)
-    idx.copy(documents = idx.documents.filter(col("doc_id") === "d2"),
-        positions = None)
-      .save(dir)
+    val rewrite = idx.copy(documents = idx.documents.filter(col("doc_id") === "d2"),
+      positions = None)
+    IndexData.write(rewrite.documents, rewrite.settings, dir)
     assert(contents(dir) == Set("d2"))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, IndexData.CompactStagingDir)))
     val reloaded = IndexData.load(spark, dir)
-    val pos = reloaded.positions.getOrElse(fail("save must re-derive positions"))
+    val pos = reloaded.positions.getOrElse(fail("write must re-derive positions"))
     assert(graft.search.PhraseSearch.phraseMatches(pos, Seq("iterator", "tree"))
       .collect().isEmpty, "stale positions from the d3 base survived the swap")
     assert(graft.search.PhraseSearch.phraseMatches(pos, Seq("volcano", "model"))
       .collect().map(_.getString(0)).toSeq == Seq("d2"))
   }
 
-  test("save of a LOADED artifact re-derives the positions carry columns: " +
+  test("rewrite of a LOADED artifact re-derives the positions carry columns: " +
       "a later append segment still assembles (round-16 ADVICE)") {
     val dir = Files.createTempDirectory("livewrite-carry").toString + "/idx"
     IndexData.write(docsDf(Seq("d1" -> "spark runs fast")), settingsDf, dir)
-    // load() strips positions to (doc_id, term, pos); pre-fix, save()
-    // persisted that frame verbatim — a file_path-less positions base that
-    // the next segment's file_path-carrying delta could not union with
-    IndexData.load(spark, dir).save(dir)
-    // ALL carried stats tables, not just positions: a save that dropped the
-    // doclen/postings carry would downgrade the artifact below the
+    // load() strips positions to (doc_id, term, pos): a writer that
+    // persisted that frame verbatim would leave a file_path-less positions
+    // base that the next segment's file_path-carrying delta cannot union with
+    val loaded = IndexData.load(spark, dir)
+    IndexData.write(loaded.documents, loaded.settings, dir)
+    // ALL carried stats tables, not just positions: a rewrite that dropped
+    // the doclen/postings carry would downgrade the artifact below the
     // append-merge layout (its require() refuses the next O(delta) merge)
     Seq(IndexData.PositionsDir, "doclen", "postings").foreach { t =>
       assert(spark.read.parquet(s"$dir/$t").columns.contains("file_path"),
-        s"saved $t must carry file_path for the segment tombstone mask")
+        s"rewritten $t must carry file_path for the segment tombstone mask")
     }
     // an O(delta) append on top must leave the artifact loadable with an
     // ASSEMBLED positional view (pre-fix: AnalysisException at load)
@@ -195,8 +205,8 @@ class LiveWriteSpec extends AnyFunSuite {
     assert(contents(dir) == Set("c1"))
   }
 
-  test("positions=off settings marker: write skips the sidecar, save stays " +
-      "opt-out, and opting out a positions-carrying artifact retires it") {
+  test("positions=off settings marker: write skips the sidecar, a rewrite " +
+      "stays opt-out, and opting out a positions-carrying artifact retires it") {
     val dir = Files.createTempDirectory("livewrite-posoff").toString + "/idx"
     val offSettings = settingsDf.unionByName(
       Seq(Setting(IndexData.PositionsKey, IndexData.PositionsOff)).toDF())
@@ -208,10 +218,11 @@ class LiveWriteSpec extends AnyFunSuite {
     assert(!hasPositions, "opt-out build must not materialize positions")
     assert(IndexData.load(spark, dir).positions.isEmpty)
 
-    // save onto the live opt-out artifact: the marker persists through the
-    // loaded settings, so the staged swap stays opt-out
-    IndexData.load(spark, dir).save(dir)
-    assert(!hasPositions, "save onto an opt-out artifact resurrected positions")
+    // rewrite of the live opt-out artifact: the marker persists through
+    // the loaded settings, so the staged swap stays opt-out
+    val loaded = IndexData.load(spark, dir)
+    IndexData.write(loaded.documents, loaded.settings, dir)
+    assert(!hasPositions, "a rewrite of an opt-out artifact resurrected positions")
 
     // flip ON: the staged swap writes the sidecar
     IndexData.write(docsDf(Seq("d2" -> "volcano model")), settingsDf, dir)

@@ -67,7 +67,7 @@ class SearchSpec extends AnyFunSuite {
     // filter — with the term-sorted file layout that is what lets parquet
     // row-group stats prune the corpus-proportional table at 100 TB.
     val tmp = java.nio.file.Files.createTempDirectory("fts-prune").toString
-    index.save(tmp)
+    IndexData.write(index.documents, index.settings, tmp)
     val loaded = IndexData.load(spark, tmp)
     val scored = Bm25.scores(Seq("spark", "fast"), loaded.postings,
       loaded.termdf, loaded.doclen, loaded.stats)

@@ -114,8 +114,8 @@ class ServeSearchSpec extends AnyFunSuite {
     assertParity("unseen-terms", "zzz qqq www")
   }
 
-  test("LARGE pq shortlist (> RerankFetchInMax — the broadcast-join rerank " +
-      "switch) is bit-identical to the DAG path, alone and composed") {
+  test("LARGE pq shortlist (> RerankFetchInMax) is bit-identical to the " +
+      "DAG path, alone and composed") {
     assertParity("pq large", "spark merge",
       HybridSearch.Options(k = 3, annPqShortlist = HybridSearch.RerankFetchInMax + 44))
     assertParity("ivf+pq large", "spark merge",
