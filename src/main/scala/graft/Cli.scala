@@ -60,8 +60,8 @@ import graft.search.HybridSearch
   *                     the q_search_snippets kernel over the ≤k hit rows; also
   *                     accepted by serve)
   *                    [--cache | --no-cache]   (interactive mode: force/skip pinning the
-  *                     serving caches; default pins iff the artifact fits
-  *                     spark.graft.serve.cacheMaxBytes — else serves disk-backed)
+  *                     serving caches; default pins iff the artifact fits half
+  *                     the driver heap — else serves disk-backed)
   *   graft.Cli serve  --db DIR [--top-k K] [--tool-name N] [--tool-description D]
   *                    [--transport stdio|http] [--host H] [--port P] [--path /mcp]
   *                    [--trim-prefix P] [--add-prefix P] [--protocol jsonl]
@@ -611,25 +611,19 @@ object Cli {
 
   /** Query-time embedder must match the index-time model — resolved from the
     * index `settings`, like the reference (`src/cli.py:327-338`). Resolved
-    * ONCE per loaded artifact: a tfidf/w2v model load is a parquet listing
-    * plus a collect of the whole model, which a served request must not
-    * repeat. Only a successful resolution is cached, so a missing or
+    * ONCE per loaded instance ([[IndexData.resolvedEmbedder]]): a tfidf/w2v
+    * model load is a parquet listing plus a collect of the whole model,
+    * which a served request must not repeat. A reloaded artifact or an
+    * [[IndexData.upsertSetting]] copy is a new instance, so it resolves
+    * afresh. Only a successful resolution is kept, so a missing or
     * mis-dimensioned model raises its named error on every request. */
   private def embedderFor(index: IndexData, db: String): graft.embed.Embedder =
-    Option(embedderCache.get(index.settings)).collect { case (`db`, e) => e }
+    Option(index.resolvedEmbedder.get()).collect { case (`db`, e) => e }
       .getOrElse {
         val e = resolveEmbedder(index, db)
-        embedderCache.put(index.settings, db -> e)
+        index.resolvedEmbedder.set(db -> e)
         e
       }
-
-  /** Resolved embedders, weak-keyed on the artifact's `settings` frame
-    * (the [[graft.search.ServeSearch]] cache idiom): a reloaded artifact or
-    * an [[IndexData.upsertSetting]] copy carries a new frame, so it
-    * resolves afresh, and a dropped artifact releases its entry. The value
-    * keeps the `db` it was resolved against (the model path lives there). */
-  private val embedderCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.DataFrame, (String, graft.embed.Embedder)]())
 
   private def resolveEmbedder(index: IndexData, db: String): graft.embed.Embedder = {
     val dim = index.setting("embedding_dim").map(_.toInt).getOrElse(64)
@@ -1387,31 +1381,18 @@ object Cli {
     total - pos
   }
 
-  /** Budget for the serving caches: `spark.graft.serve.cacheMaxBytes`, or
-    * half the driver heap (local mode: driver ≡ executor storage). A
-    * malformed value falls back to the default with a note — startup must
-    * not crash on a bad conf (same contract as the recall-curve decode). */
-  private def serveCacheBudget(spark: SparkSession): Long = {
-    val default = Runtime.getRuntime.maxMemory / 2
-    spark.conf.getOption("spark.graft.serve.cacheMaxBytes").map { v =>
-      scala.util.Try(v.trim.toLong).getOrElse {
-        System.err.println(s"[graft] malformed spark.graft.serve.cacheMaxBytes " +
-          s"'$v' (want plain bytes) — using the default ($default)")
-        default
-      }
-    }.getOrElse(default)
-  }
-
   private def cacheFlagOf(a: Array[String]): Option[Boolean] =
     if (flag(a, "--no-cache")) Some(false)
     else if (flag(a, "--cache")) Some(true)
     else None
 
-  /** Load an artifact serving-ready under the cache gate: within budget,
-    * pin every dataset + the impact-scored postings frame (the warm-path
-    * startup `graft serve` always ran); above it, serve off the pruned
-    * parquet layouts with only the driver-local term-df/stats caches. */
-  private def serveReady(spark: SparkSession, db: String,
+  /** Load an artifact serving-ready under the cache gate: within budget
+    * (half the driver heap — local mode: driver ≡ executor storage), pin
+    * every dataset + the impact-scored postings frame; above it, serve off
+    * the pruned parquet layouts with only the instance's memoized term dfs
+    * and stats row. The one warm-load path: `graft serve` and interactive
+    * search load through it. */
+  private[graft] def serveReady(spark: SparkSession, db: String,
       cacheFlag: Option[Boolean]): IndexData = {
     val loaded = IndexData.load(spark, db)
     // an explicit flag decides outright — never pay the recursive artifact
@@ -1421,19 +1402,19 @@ object Cli {
       case Some(c) => c
       case None =>
         val bytes = artifactBytes(spark, db)
-        val budget = serveCacheBudget(spark)
+        val budget = Runtime.getRuntime.maxMemory / 2
         val cache = shouldCacheForServing(bytes, budget, cacheFlag)
         if (!cache) System.err.println(
           f"[graft] artifact is ${bytes / 1e9}%.2f GB on disk (×$ServeCacheInflation " +
             f"cached ≈ ${bytes * ServeCacheInflation / 1e9}%.2f GB > budget " +
-            f"${budget / 1e9}%.2f GB; spark.graft.serve.cacheMaxBytes) — serving " +
+            f"${budget / 1e9}%.2f GB, half the driver heap) — serving " +
             "disk-backed off the pruned parquet layouts; pass --cache to force pinning")
         cache
     }
     if (doCache) {
       val index = loaded.cached()
       index.stats.count() // materialize caches before the first request
-      graft.search.ServeSearch.scoredPostings(index) // impact postings too
+      index.scoredPostings.foreach(_.count()) // impact postings too
       index
     } else {
       // disk-backed: prewarm parquet footers of the BOUNDED dirs (sidecars,

@@ -102,7 +102,7 @@ object ServingLane {
       // was previously untimed, so a startup regression was invisible to
       // the per-request p50s (round-12 directive 4). Timed span = exactly
       // what `graft serve` runs before answering: load, cache pins,
-      // materializing counts, and the scoredPostings build.
+      // materializing counts, and the impact-scored postings build.
       val t0 = System.nanoTime()
       // the on-disk postings swap happens BEFORE the timed cache pins: the
       // startup metric must measure the configuration that is actually
@@ -126,7 +126,7 @@ object ServingLane {
       cached.pq.foreach { p => p.codes.count(); p.codebooks.count() }
       // warm serving posture: the impact-scored postings frame too, so the
       // lane measures the path `graft serve` actually runs after startup
-      graft.search.ServeSearch.scoredPostings(cached)
+      cached.scoredPostings.foreach(_.count())
       val startupMs = (System.nanoTime() - t0) / 1e6
       (cached, startupMs, d)
     }
@@ -599,13 +599,7 @@ object ServingLane {
       // unpin the cached artifacts (every dataset cached() pinned) and drop
       // the temp index dirs — a bench run must not leave the SF index in
       // executor storage memory or a parquet copy on disk
-      indexes.foreach { i =>
-        graft.search.ServeSearch.releaseScored(i)
-        Seq(i.documents, i.postings, i.termdf, i.doclen, i.stats, i.settings)
-          .foreach(_.unpersist(false))
-        i.ann.foreach { a => a.centroids.unpersist(false); a.postings.unpersist(false) }
-        i.pq.foreach { p => p.codes.unpersist(false); p.codebooks.unpersist(false) }
-      }
+      indexes.foreach(_.uncacheAll())
       dirs.foreach(dd => org.apache.commons.io.FileUtils.deleteQuietly(dd.toFile))
     }
   }

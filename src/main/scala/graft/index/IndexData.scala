@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.search.Bm25
 
@@ -65,10 +65,23 @@ final case class IndexData(
     // assembled `ann`/`pq` above already cover the segment docs. False only
     // for legacy segments written before the delta layout — `--ann` search
     // then warns that sidecars cover the compacted base only
-    sidecarsCoverSegments: Boolean = true) {
+    sidecarsCoverSegments: Boolean = true,
+    // impact-scored postings (term, doc_id, s), cache-pinned — set by
+    // [[cached]]; the warm BM25 leg of [[graft.search.ServeSearch]] reads
+    // it, and None serves the cold leg. Derived from postings, termdf,
+    // doclen and stats: a copy that replaces one of those must drop it
+    scoredPostings: Option[DataFrame] = None) {
 
   /** Cache the search-path datasets for a long-lived serving session
-    * (SURVEY.md §3.3). */
+    * (SURVEY.md §3.3), plus the impact-scored postings: `s` is the full
+    * per-(term, doc) BM25 contribution ([[Bm25.termScore]]) — tf, df, dl,
+    * N and avgdl are all static for the life of the loaded artifact — so a
+    * warm request's BM25 leg is filter(In(term,…)) → sum → top-k over this
+    * one frame, with no per-request join or broadcast at any corpus size.
+    * The frame inherits the term-clustered postings layout, so the `In`
+    * filter prunes cached batches by their stats as it prunes row groups
+    * on disk. `.cache()` is lazy: the first action (`Cli.serveReady`
+    * counts it before the first request) builds and pins it. */
   def cached(): IndexData = copy(
     documents = documents.cache(),
     postings = postings.cache(),
@@ -81,9 +94,25 @@ final case class IndexData(
     // positions stay UNCACHED by design: the phrase probe's value is the
     // row-group-pruned parquet scan (df-proportional reads), and pinning a
     // Σdl-sized table for an opt-in filter would double serving memory
-    positions = positions)
+    positions = positions,
+    scoredPostings = Some(impactScored.cache()))
 
-  /** Drop every cache pin [[cached]] registered (serving teardown / reload).
+  /** The join behind [[scoredPostings]]. No broadcast hints on the
+    * corpus-scaled sides: it runs once per loaded artifact, so the
+    * optimizer's own broadcast-vs-shuffle choice is right at every scale.
+    * dl-carrying postings (every artifact since the denormalized layout)
+    * skip the corpus-sized doclen join. */
+  private def impactScored: DataFrame = {
+    val base = postings.join(termdf, "term")
+    (if (postings.columns.contains("dl")) base else base.join(doclen, "doc_id"))
+      .crossJoin(broadcast(stats))
+      .select(col("term"), col("doc_id"),
+        Bm25.termScore(col("tf"), col("df"), col("dl"),
+          col("n_docs"), col("avgdl")).as("s"))
+  }
+
+  /** Drop every cache pin [[cached]] registered, the impact-scored
+    * postings included — the one serving teardown (reload, bench lane).
     * Unpersisting is by canonicalized plan, so this releases the executor
     * storage blocks even though [[cached]] returned copies of the frames.
     * `blocking = true` when another artifact loads right after in the same
@@ -96,7 +125,47 @@ final case class IndexData(
     ann.foreach { a => a.centroids.unpersist(blocking); a.postings.unpersist(blocking) }
     pq.foreach { p => p.codes.unpersist(blocking); p.codebooks.unpersist(blocking) }
     positions.foreach(_.unpersist(blocking))
+    scoredPostings.foreach(_.unpersist(blocking))
   }
+
+  /** The corpus stats row, collected once per instance (the
+    * [[settingsMap]] pattern) and replayed as a LocalRelation: the cold
+    * BM25 leg's crossJoin(broadcast(stats)) then costs no per-request job. */
+  private lazy val statsRows: Array[Row] = stats.collect()
+
+  private[graft] def localStats: DataFrame =
+    stats.sparkSession.createDataFrame(java.util.Arrays.asList(statsRows: _*), stats.schema)
+
+  /** term → termdf row (None = absent from the corpus) for the terms the
+    * cold BM25 leg has looked up on this instance: a term's df is static
+    * for the life of the loaded artifact, so a seen term skips its lookup
+    * job, OOV terms included. Bounded at [[IndexData.TermDfMemoMax]]
+    * entries, so an adversarial query stream cannot grow driver memory. */
+  private val termDfMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, Option[Row]]()
+
+  /** The termdf rows of `terms`, as a LocalRelation: one pushed
+    * `In(term, …)` lookup for the terms not yet memoized, none otherwise. */
+  private[graft] def localTermdf(terms: Seq[String]): DataFrame = {
+    val distinct = terms.distinct
+    val cold = distinct.filterNot(termDfMemo.containsKey)
+    val found =
+      if (cold.isEmpty) Map.empty[String, Row]
+      else termdf.filter(col("term").isin(cold: _*)).collect()
+        .map(r => r.getAs[String]("term") -> r).toMap
+    // per-put bound check: a single before-the-loop check would let one
+    // query overshoot the cap by |its cold terms|−1
+    cold.foreach(t =>
+      if (termDfMemo.size() < IndexData.TermDfMemoMax) termDfMemo.put(t, found.get(t)))
+    val rows = distinct.flatMap(t => Option(termDfMemo.get(t)).getOrElse(found.get(t)))
+    termdf.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), termdf.schema)
+  }
+
+  /** The query embedder resolved for this instance, with the `db` it was
+    * resolved against (a model path lives there) — set by `Cli.embedderFor`
+    * on its first successful resolution. */
+  private[graft] val resolvedEmbedder =
+    new java.util.concurrent.atomic.AtomicReference[(String, graft.embed.Embedder)]()
 
   /** The settings rows as a driver-local map, collected ONCE per instance
     * (a handful of rows — the [[AnnIndex.centroidArray]] pattern): a
@@ -132,6 +201,9 @@ final case class IndexData(
 }
 
 object IndexData {
+
+  /** Bound on [[IndexData.localTermdf]]'s per-instance memo. */
+  private[graft] val TermDfMemoMax = 1 << 20
 
   /** THE keyed settings upsert (S5, reference `INSERT OR REPLACE`,
     * `src/db.py:170-178`): rows of `existing` whose key appears in `fresh`
@@ -195,7 +267,7 @@ object IndexData {
       .write.mode("overwrite").parquet(s"$dir/postings")
     // termdf range-clustered + sorted by term: the serving session's
     // cold-term df lookups are a pushed In(term, …) filter too
-    // ([[graft.search.ServeSearch.localTermdf]]) — unclustered, every
+    // ([[IndexData.localTermdf]]) — unclustered, every
     // lookup scanned the vocabulary-sized table. Derived from the WRITTEN
     // postings parquet, not the lineage — the lineage would re-run the
     // corpus-wide explode+aggregate a second time (appendMerge reads its

@@ -31,8 +31,8 @@ import graft.rerank.Reranker
   * sets it) runs three bounded Spark jobs for the exact and IVF legs and
   * four for PQ — counts pinned by ServeJobsSpec:
   *
-  *   1. the BM25 leg — filter + sum + top-k over the session's cached
-  *      impact-scored postings ([[scoredPostings]]) — collected, and
+  *   1. the BM25 leg — filter + sum + top-k over the instance's cached
+  *      impact-scored postings ([[IndexData.scoredPostings]]) — collected, and
   *   2. the VSS leg (the same exact/IVF/PQ leg builders), collected
   *      CONCURRENTLY with 1 (independent subtrees of the same session);
   *      PQ is two jobs here: the ADC shortlist, then its exact rerank;
@@ -60,6 +60,13 @@ import graft.rerank.Reranker
   * (round-13 finding; DocFetchPruneSpec pins rows-read). The reference
   * relies on the same property via time-ordered ULIDs + DuckDB zonemaps
   * (`src/indexer.py:105-107`).
+  *
+  * The per-artifact serving state lives on the [[IndexData]] instance, not
+  * here: the impact-scored postings frame ([[IndexData.cached]] defines
+  * it, [[IndexData.uncacheAll]] releases it with every other pin) and the
+  * cold leg's memoized stats row and term dfs. A reloaded artifact is a
+  * new instance, so it starts with fresh state, and dropping an instance
+  * drops its memos.
   *
   * Contract: the reranker must score each (query, text) pair independently
   * of its batch (every engine reranker does; the trait's scaladoc already
@@ -110,37 +117,23 @@ object ServeSearch {
     val ftsF: Future[Seq[(String, Double)]] =
       if (terms.isEmpty) Future.successful(Seq.empty) // isin() over no terms matches nothing
       else Future {
-        // IMPACT-SCORED POSTINGS (warm serving sessions): every factor of
-        // the BM25 contribution — tf, df, dl, N, avgdl — is static per
-        // (term, doc) for the life of the loaded artifact, so a session
-        // that called [[scoredPostings]] at startup (`graft serve`, the
-        // interactive loop, the bench lane) serves the leg as
-        // filter(In(term,…)) → groupBy(doc_id).sum → TakeOrdered over the
-        // cached scored frame: ONE job with ZERO per-request joins or
-        // broadcast materializations at ANY corpus size. (The replica
-        // formulation below re-runs the three-way join per request; past
-        // the auto-broadcast threshold Spark re-broadcast the doclen side
-        // on EVERY query — 3 exchange jobs/request at 50k docs,
-        // ServeProbe.) Per-row doubles are the same termScore expression
-        // over the same inputs and the aggregation topology is unchanged,
-        // so scores stay bit-identical either way (ServeSearchSpec pins
-        // both). A COLD one-shot request deliberately keeps the replica
-        // path: building the scored frame would join the ENTIRE postings
-        // table where the pushed-In probe reads only the query's row
-        // groups off disk.
-        val scored = Option(scoredPostingsCache.get(index.postings))
-        val leg0 = scored match {
+        // WARM (a [[IndexData.cached]] instance): filter(In(term,…)) →
+        // groupBy(doc_id).sum → TakeOrdered over the cached impact-scored
+        // postings — ONE job with ZERO per-request joins or broadcast
+        // materializations at ANY corpus size. COLD (a plain load — the
+        // one-shot request, disk-backed serving): the pushed-In postings
+        // probe reads only the query's row groups off disk, joined with
+        // the instance's memoized termdf rows and stats row; building the
+        // scored frame there would join the ENTIRE postings table. Per-row
+        // doubles are the same termScore expression over the same inputs
+        // and the aggregation topology is unchanged, so scores are
+        // bit-identical either way (ServeSearchSpec pins both).
+        val leg0 = index.scoredPostings match {
           case Some(sp) => sp
             .filter(col("term").isin(terms.distinct: _*))
             .groupBy("doc_id").agg(sum(col("s")).as("score"))
           case None => Bm25.scores(terms, index.postings,
-            localTermdf(index.termdf, terms),
-            // dl-carrying postings: scores never reads doclen, so don't
-            // pay the replica probe (plan-stats walk + possible collect
-            // into the session replica cache) for a table the path ignores
-            if (index.postings.columns.contains("dl")) index.doclen
-            else localIfBroadcastable(index.doclen),
-            localStats(index.stats))
+            index.localTermdf(terms), index.doclen, index.localStats)
         }
         // phrase-/near-first: cut top-k over the matching docs only — the
         // same semi join the DAG path plans (ServeSearchSpec/NearRankSpec
@@ -377,121 +370,10 @@ object ServeSearch {
       java.util.Arrays.asList(out: _*), schema)
   }
 
-  /** The serving session's impact-scored postings: `(term, doc_id, s)` with
-    * `s` = the full per-(term,doc) BM25 contribution ([[Bm25.termScore]]),
-    * joined and CACHED once per loaded artifact. The map is weak-keyed on
-    * the postings frame so a reloaded/compacted index computes a FRESH
-    * scored frame — but note the weak key only frees the map ENTRY:
-    * `df.cache()` registers the plan strongly in Spark's CacheManager, so
-    * the old frame's executor storage blocks are NOT reclaimed by GC of
-    * the key (round-12 ADVICE). Any code path that drops or replaces an
-    * IndexData mid-session MUST call [[releaseScored]] on the old one (the
-    * bench serving lane does; the CLI commands hold one artifact for the
-    * life of the session and free everything at `spark.stop()`). The frame
-    * inherits the artifact's term-clustered layout, so the per-request
-    * `In(term,…)` filter prunes cached batches by batch stats exactly as
-    * it prunes row groups on disk. This is the classic impact-postings
-    * serving design: at 100 TB a request reads ~Σdf(t) scored rows and
-    * touches no other table. */
-  private val scoredPostingsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, DataFrame]())
-
-  private[graft] def scoredPostings(index: IndexData): DataFrame =
-    scoredPostingsCache.computeIfAbsent(index.postings, { _ =>
-      // no broadcast hints on the corpus-scaled sides (termdf is
-      // vocab-sized, doclen corpus-sized): this build runs ONCE per loaded
-      // artifact, so letting the optimizer pick broadcast-vs-shuffle by its
-      // own size estimates is the correct posture at every scale.
-      // dl-carrying postings (every artifact since the denormalized
-      // layout) skip the corpus-sized doclen join — the startup build is
-      // then one vocab join over the term-clustered postings, shuffle-free
-      // on the doc axis.
-      val base = index.postings.join(index.termdf, "term")
-      val scored = (if (index.postings.columns.contains("dl")) base
-        else base.join(index.doclen, "doc_id"))
-        .crossJoin(broadcast(index.stats))
-        .select(col("term"), col("doc_id"),
-          Bm25.termScore(col("tf"), col("df"), col("dl"),
-            col("n_docs"), col("avgdl")).as("s"))
-        .cache()
-      scored.count() // materialize eagerly: first request must not time the build
-      scored
-    })
-
-  /** Drop the cached impact-scored frame for an index (serving teardown).
-    * `blocking = true` when another artifact is loaded right after in the
-    * same session: async eviction races the next scored build's cache
-    * materialization and thrashes storage memory (measured 5-10× on the
-    * reload trials of StartupProbe at 500k docs). */
-  private[graft] def releaseScored(index: IndexData, blocking: Boolean = false): Unit = {
-    val f = scoredPostingsCache.remove(index.postings)
-    if (f != null) f.unpersist(blocking)
-  }
-
-  /** Corpus stats are STATIC per index artifact: collect once per serving
-    * session (weak-keyed so a dropped index releases its entry) and replay
-    * as a LocalRelation — the crossJoin(broadcast(stats)) inside
-    * [[Bm25.scores]] then costs no per-request job. */
-  private val statsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Array[Row]]())
-
-  private[graft] def localStats(stats: DataFrame): DataFrame = {
-    val rows = statsCache.computeIfAbsent(stats, s => s.collect())
-    stats.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), stats.schema)
-  }
-
-  /** Session-replica of a STATIC artifact dataset, but only when its
-    * optimizer size estimate is under the auto-broadcast threshold — the
-    * exact rule under which Spark would otherwise re-broadcast it on EVERY
-    * request (so the replica's driver-memory footprint is, by definition,
-    * one Spark would have paid per query anyway). Above the threshold the
-    * dataset keeps its distributed join untouched. */
-  private val replicaCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Option[Array[Row]]]())
-
-  private[graft] def localIfBroadcastable(df: DataFrame): DataFrame =
-    replicaCache.computeIfAbsent(df, d => {
-      val thr = d.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-      val size = d.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (thr > 0 && size <= thr) Some(d.collect()) else None
-    }) match {
-      case Some(rows) => df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), df.schema)
-      case None => df // above threshold: keep the distributed join
-    }
-
-  /** Per-session term→df cache over the artifact's termdf: a term's df is
-    * static for the life of the loaded index, so warm terms skip the
-    * lookup job entirely. Bounded (an adversarial query stream cannot grow
-    * driver memory past [[TermDfCacheMax]] entries); absent terms cache as
-    * None so OOV-heavy queries stay warm too. */
-  private val TermDfCacheMax = 1 << 20
-  private val termDfCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame,
-      java.util.concurrent.ConcurrentHashMap[String, Option[Row]]]())
-
-  private[graft] def localTermdf(termdf: DataFrame, terms: Seq[String]): DataFrame = {
-    val cache = termDfCache.computeIfAbsent(termdf,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, Option[Row]]())
-    val distinct = terms.distinct
-    val cold = distinct.filterNot(cache.containsKey)
-    if (cold.nonEmpty) {
-      val found = termdf.filter(col("term").isin(cold: _*)).collect()
-        .map(r => r.getAs[String]("term") -> r).toMap
-      // per-put bound check: a single before-the-loop check would let one
-      // query overshoot the cap by |its cold terms|−1
-      cold.foreach(t => if (cache.size() < TermDfCacheMax) cache.put(t, found.get(t)))
-      val rows = distinct.flatMap(t =>
-        Option(cache.get(t)).getOrElse(found.get(t)))
-      termdf.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), termdf.schema)
-    } else {
-      val rows = distinct.flatMap(t => cache.get(t))
-      termdf.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), termdf.schema)
-    }
-  }
+  /** Drop an index's cached impact-scored frame ([[IndexData.scoredPostings]]);
+    * [[IndexData.uncacheAll]] drops it together with every other pin. */
+  private[graft] def releaseScored(index: IndexData, blocking: Boolean = false): Unit =
+    index.scoredPostings.foreach(_.unpersist(blocking))
 
   /** Driver replica of [[HybridSearch.rewritePath]] (same Java regexes the
     * codegen'd expressions compile, incl. the os.path.join add semantics —

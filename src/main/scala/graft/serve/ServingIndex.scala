@@ -16,8 +16,9 @@ import graft.index.IndexData
   * segments) file stats, never corpus-sized) and, when it moves, swaps in a
   * fresh serving-ready load:
   *
-  *   1. release the OLD generation first — [[graft.search.ServeSearch
-  *      .releaseScored]] + [[IndexData.uncacheAll]], both BLOCKING: async
+  *   1. release the OLD generation first — [[IndexData.uncacheAll]]
+  *      (every cache pin, the impact-scored postings included; the
+  *      instance's memos go with the instance), BLOCKING: async
   *      eviction races the next generation's cache materialization and
   *      thrashes storage memory (measured 5-10× on StartupProbe reload
   *      trials at 500k docs). Release-BEFORE-load is also a correctness
@@ -70,9 +71,7 @@ final class ServingIndex private (
     val v = IndexData.artifactVersion(spark, db)
     if (v == version) false
     else {
-      val old = cur
-      graft.search.ServeSearch.releaseScored(old, blocking = true)
-      old.uncacheAll(blocking = true)
+      cur.uncacheAll(blocking = true)
       // a throwing load leaves `version` unchanged, so the NEXT check
       // retries instead of wedging on the released old generation; the
       // request that triggered the check surfaces the error and the

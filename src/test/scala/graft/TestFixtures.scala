@@ -10,12 +10,8 @@ object TestFixtures {
 
   /** An artifact loaded the way `graft serve --cache` loads it: cache pins
     * plus the impact-scored postings frame, built before the first request. */
-  def servingLoad(spark: SparkSession, dir: String): graft.index.IndexData = {
-    val i = graft.index.IndexData.load(spark, dir).cached()
-    i.stats.count()
-    graft.search.ServeSearch.scoredPostings(i)
-    i
-  }
+  def servingLoad(spark: SparkSession, dir: String): graft.index.IndexData =
+    Cli.serveReady(spark, dir, Some(true))
 
   /** Documents-schema corpus where doc i sits near unit axis `axisOf(i)` of
     * a 16-dim space, plus small id-derived noise (k-means has real work; no

@@ -12,7 +12,9 @@ import graft.rerank.TokenOverlapReranker
 /** ServeSearch is a latency reformulation, NOT a second engine: every
   * (query, options) cell here must produce BIT-IDENTICAL rows and columns
   * to HybridSearch.search — including the degradation contracts (zero-norm
-  * query, NaN doc embedding, absent legs) and every ANN mode. */
+  * query, NaN doc embedding, absent legs) and every ANN mode — on both
+  * BM25 legs: the cold one of a plain load and the warm impact-scored one
+  * of a `cached()` instance. */
 class ServeSearchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -20,7 +22,7 @@ class ServeSearchSpec extends AnyFunSuite {
   private val he = new HashingEmbedder(8)
   private val rr = new TokenOverlapReranker()
 
-  private lazy val idx: IndexData = {
+  private lazy val dir: String = {
     val contents = Seq(
       "d1" -> "spark runs fast and spark scales",
       "d2" -> "duck db is a small database",
@@ -53,20 +55,29 @@ class ServeSearchSpec extends AnyFunSuite {
     val withAnn = IndexJob.withAnn(IndexData.load(spark, tmp), tmp,
       annClusters = 2, annIters = 2)
     IndexJob.withPq(withAnn, tmp, pqCodes = 2)
-    IndexData.load(spark, tmp).cached()
+    tmp
   }
+
+  /** The warm instance (`cached()`: impact-scored BM25 leg) and a plain
+    * load of the same artifact (cold BM25 leg). */
+  private lazy val idx: IndexData = IndexData.load(spark, dir).cached()
+  private lazy val cold: IndexData = IndexData.load(spark, dir)
+  private def legs: Seq[(String, IndexData)] = Seq("cold" -> cold, "warm" -> idx)
 
   private def assertParity(label: String, query: String,
       opts: HybridSearch.Options = HybridSearch.Options(),
       embedder: Option[Embedder] = Some(he),
-      reranker: Option[graft.rerank.Reranker] = Some(rr)): Unit = {
-    val dag = HybridSearch.search(idx, query, WhitespaceAnalyzer, embedder, reranker, opts)
-    val srv = ServeSearch.search(idx, query, WhitespaceAnalyzer, embedder, reranker, opts)
-    assert(dag.columns.toSeq == srv.columns.toSeq,
-      s"$label: columns dag=${dag.columns.toSeq} serve=${srv.columns.toSeq}")
+      reranker: Option[graft.rerank.Reranker] = Some(rr),
+      on: Seq[(String, IndexData)] = legs, dagOn: IndexData = idx): Unit = {
+    val dag = HybridSearch.search(dagOn, query, WhitespaceAnalyzer, embedder, reranker, opts)
     val dr = dag.collect().toSeq.map(_.toSeq)
-    val sr = srv.collect().toSeq.map(_.toSeq)
-    assert(dr == sr, s"$label:\n  dag  =$dr\n  serve=$sr")
+    on.foreach { case (leg, index) =>
+      val srv = ServeSearch.search(index, query, WhitespaceAnalyzer, embedder, reranker, opts)
+      assert(dag.columns.toSeq == srv.columns.toSeq,
+        s"$label ($leg): columns dag=${dag.columns.toSeq} serve=${srv.columns.toSeq}")
+      val sr = srv.collect().toSeq.map(_.toSeq)
+      assert(dr == sr, s"$label ($leg):\n  dag  =$dr\n  serve=$sr")
+    }
   }
 
   test("default hybrid (mean fusion + rerank) is bit-identical") {
@@ -153,9 +164,11 @@ class ServeSearchSpec extends AnyFunSuite {
       })
     val dag = rows(HybridSearch.search(idx, "spark joins tables",
       WhitespaceAnalyzer, Some(he), Some(nanRr), opts))
-    val serve = rows(ServeSearch.search(idx, "spark joins tables",
-      WhitespaceAnalyzer, Some(he), Some(nanRr), opts))
-    assert(dag == serve, s"nan-rerank:\n  dag  =$dag\n  serve=$serve")
+    legs.foreach { case (leg, index) =>
+      val serve = rows(ServeSearch.search(index, "spark joins tables",
+        WhitespaceAnalyzer, Some(he), Some(nanRr), opts))
+      assert(dag == serve, s"nan-rerank ($leg):\n  dag  =$dag\n  serve=$serve")
+    }
     // and the semantics themselves: the NaN-scored doc survives the
     // threshold filter and leads the sort in the serve path
     val srv = ServeSearch.search(idx, "spark joins tables", WhitespaceAnalyzer,
@@ -212,6 +225,13 @@ class ServeSearchSpec extends AnyFunSuite {
     assert(meta.getString(2) == "fast [c++] kernels beat jits", meta)
   }
 
+  test("dl-less postings (artifacts written before the denormalized layout) " +
+      "serve through the doclen join, bit-identical") {
+    val legacy = cold.copy(postings = cold.postings.drop("dl"))
+    assertParity("dl-less", "spark joins tables", on = Seq("cold" -> legacy),
+      dagOn = legacy)
+  }
+
   test("high threshold and small k are bit-identical") {
     assertParity("threshold", "spark joins tables",
       opts = HybridSearch.Options(scoreThreshold = 0.5))
@@ -238,41 +258,41 @@ class ServeSearchSpec extends AnyFunSuite {
     write(delta, "a.md", "# A v2\n\nreplaced body about spark hash joins\n")
     write(delta, "c.md", "# C\n\nhybrid ranking fuses lexical and dense scores\n")
     IndexJob.run(spark, Seq(delta), idxDir, he, opts = jopts(delta, clear = false))
-    val live = IndexData.load(spark, idxDir).cached()
-    assert(live.pendingSegments >= 1)
-    def parity(label: String, q: String): Unit = {
+    def parity(label: String, live: IndexData, q: String): Unit = {
+      assert(live.pendingSegments >= 1)
       val dag = HybridSearch.search(live, q, WhitespaceAnalyzer, Some(he), Some(rr))
       val srv = ServeSearch.search(live, q, WhitespaceAnalyzer, Some(he), Some(rr))
       val (dr, sr) = (dag.collect().toSeq.map(_.toSeq), srv.collect().toSeq.map(_.toSeq))
       assert(dr == sr, s"$label:\n  dag  =$dr\n  serve=$sr")
       assert(dr.nonEmpty, s"$label: empty result proves nothing")
     }
-    parity("cold-live", "spark joins") // replica path over segmented frames
-    ServeSearch.scoredPostings(live)
+    // cold leg over the segmented frames
+    parity("cold-live", IndexData.load(spark, idxDir), "spark joins")
+    val live = IndexData.load(spark, idxDir).cached()
     try {
-      parity("warm-live", "spark joins") // impact postings over the live view
-      parity("warm-live-2", "dense scores fuse")
-    } finally ServeSearch.releaseScored(live)
+      parity("warm-live", live, "spark joins") // impact postings over the live view
+      parity("warm-live-2", live, "dense scores fuse")
+    } finally live.uncacheAll()
   }
 
   test("WARM impact-postings leg is bit-identical too (the `graft serve` path)") {
-    // a warmed session serves the BM25 leg from the precomputed
+    // a cached() instance serves the BM25 leg from the precomputed
     // impact-scored postings frame instead of the per-request three-way
     // join — same termScore doubles, same aggregation topology, so parity
     // must hold across fusion modes, ANN modes and degradations
-    ServeSearch.scoredPostings(idx)
-    try {
-      assertParity("warm-default", "spark joins tables")
-      assertParity("warm-rrf", "fast merge windows",
-        opts = HybridSearch.Options(fusion = "rrf", scoreThreshold = 0.001))
-      assertParity("warm-ivf", "spark joins tables",
-        opts = HybridSearch.Options(annNprobe = 1))
-      assertParity("warm-pq", "spark joins tables",
-        opts = HybridSearch.Options(annPqShortlist = 3))
-      assertParity("warm-fts-only", "spark joins tables", embedder = None)
-      assertParity("warm-unseen", "zzz qqq www")
-      assertParity("warm-threshold", "spark joins tables",
-        opts = HybridSearch.Options(scoreThreshold = 0.5))
-    } finally ServeSearch.releaseScored(idx)
+    assert(idx.scoredPostings.isDefined, "cached() defines the impact-scored frame")
+    assert(cold.scoredPostings.isEmpty, "a plain load serves the cold leg")
+    val warm = Seq("warm" -> idx)
+    assertParity("warm-default", "spark joins tables", on = warm)
+    assertParity("warm-rrf", "fast merge windows",
+      opts = HybridSearch.Options(fusion = "rrf", scoreThreshold = 0.001), on = warm)
+    assertParity("warm-ivf", "spark joins tables",
+      opts = HybridSearch.Options(annNprobe = 1), on = warm)
+    assertParity("warm-pq", "spark joins tables",
+      opts = HybridSearch.Options(annPqShortlist = 3), on = warm)
+    assertParity("warm-fts-only", "spark joins tables", embedder = None, on = warm)
+    assertParity("warm-unseen", "zzz qqq www", on = warm)
+    assertParity("warm-threshold", "spark joins tables",
+      opts = HybridSearch.Options(scoreThreshold = 0.5), on = warm)
   }
 }

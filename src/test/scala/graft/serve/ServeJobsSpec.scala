@@ -7,7 +7,6 @@ import graft.TestFixtures.servingLoad
 import graft.core.Schemas.Setting
 import graft.embed.HashingEmbedder
 import graft.index.{IndexData, IndexJob}
-import graft.search.ServeSearch
 import graft.util.InputMetrics
 
 /** The served request's Spark job budget, pinned as job COUNTS (never
@@ -18,7 +17,10 @@ import graft.util.InputMetrics
   * job per term join, in the candidate restriction and — near-first
   * ranking — in the BM25 leg too. Analyzer and embedder resolution from the
   * artifact settings must add none: the settings are a per-instance
-  * snapshot and the embedder is resolved once per loaded artifact. */
+  * snapshot and the embedder is resolved once per loaded artifact. A
+  * disk-backed (`--no-cache`) request serves the cold BM25 leg off parquet,
+  * with the corpus stats row and the seen terms' dfs memoized on the
+  * instance: only a term the instance has never looked up costs a job. */
 class ServeJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -91,6 +93,32 @@ class ServeJobsSpec extends AnyFunSuite {
       warm = "spark joins tables", query = "fast merge tables") == 7, "exact + near")
   }
 
+  test("disk-backed serving (--no-cache) keeps its stats rows and term dfs " +
+      "per loaded instance: a repeated-term request schedules 5 jobs for exact " +
+      "and IVF, 6 for PQ; a never-seen term adds its one df lookup, and its " +
+      "repeat adds none") {
+    // a copy of the artifact: Spark's CacheManager matches cached plans by
+    // path, so a plain load of `dir` would read the cache pins of `index`
+    val diskDir = java.nio.file.Files.createTempDirectory("servejobs-disk").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir),
+      new java.io.File(diskDir))
+    val disk = Cli.serveReady(spark, diskDir, Some(false))
+    assert(disk.postings.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(disk.scoredPostings.isEmpty, "disk-backed serving takes the cold BM25 leg")
+    def jobs(ann: (Int, Int), warm: String, query: String) =
+      jobsPerRequest(ann, warm = warm, query = query, served = disk, db = diskDir)
+    val q = "fast merge windows"
+    assert(jobs((0, 0), q, q) == 5, "exact")
+    assert(jobs((2, 0), q, q) == 5, "ivf")
+    assert(jobs((0, 4), q, q) == 6, "pq")
+    // "rows" is in the corpus, "qqq" is not: each is looked up once, and an
+    // absent term is remembered as absent
+    Seq("rows", "qqq").foreach { t =>
+      assert(jobs((0, 0), q, s"$q $t") == 6, s"first request with '$t'")
+      assert(jobs((0, 0), s"$q $t", s"$q $t") == 5, s"repeat with '$t'")
+    }
+  }
+
   test("a tfidf artifact loads its model once per loaded artifact; a " +
       "missing model fails every request with its named error") {
     val docs = java.nio.file.Files.createTempDirectory("servejobs-docs")
@@ -104,7 +132,7 @@ class ServeJobsSpec extends AnyFunSuite {
     assert(served.setting("embedding_model").exists(_.startsWith("tfidf-")))
     assert(jobsPerRequest((0, 0), warm = "spark tables", query = "merge windows",
       served = served, db = db) == 3, "model load must not repeat per request")
-    served.uncacheAll(); ServeSearch.releaseScored(served)
+    served.uncacheAll()
 
     val fs = new org.apache.hadoop.fs.Path(db)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -41,7 +41,7 @@ class ServeReloadSpec extends AnyFunSuite {
     val before = holder.current
     assert(!holder.checkAndReload())
     assert(holder.current eq before)
-    before.uncacheAll(); ServeSearch.releaseScored(before)
+    before.uncacheAll()
   }
 
   test("base rewrite: reload serves the new doc and releases the old " +
@@ -65,7 +65,7 @@ class ServeReloadSpec extends AnyFunSuite {
       servingLoad(spark, dir)
     })
     old = holder.current
-    oldScored = ServeSearch.scoredPostings(old) // the frame servingLoad cached
+    oldScored = old.scoredPostings.get // the frame servingLoad cached
     assert(hits(holder.current, "volcano").isEmpty)
 
     Thread.sleep(5) // commit-marker mtime granularity is ms
@@ -82,7 +82,41 @@ class ServeReloadSpec extends AnyFunSuite {
     // and the new generation is warm (the loadFn ran, not a lazy view)
     assert(holder.current.postings.storageLevel != StorageLevel.NONE)
     assert(!holder.checkAndReload(), "second check must be a no-op")
-    holder.current.uncacheAll(); ServeSearch.releaseScored(holder.current)
+    holder.current.uncacheAll()
+  }
+
+  test("uncacheAll alone releases a serving-ready load: every cache pin, " +
+      "the impact-scored postings included, reads back NONE") {
+    val dir = Files.createTempDirectory("reload-uncache").toString
+    val he = new HashingEmbedder(dim = 8)
+    val df = Seq(
+        "d1" -> "spark runs fast and spark scales", "d2" -> "duck db is a small database",
+        "d3" -> "spark spark spark joins tables", "d4" -> "unrelated words entirely here",
+        "d5" -> "fast joins merge sorted tables", "d6" -> "spark streams merge windows")
+      .map { case (id, text) => (id, text, text.split(" ").toSeq, he.embed(Seq(text)).head) }
+      .toDF("doc_id", "content", "tokens", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+      .withColumn("file_path", concat(lit("docs/"), col("doc_id")))
+      .withColumn("header_path", lit(""))
+      .withColumn("line_start", lit(1)).withColumn("line_end", lit(1))
+    IndexData.write(df, Seq(Setting("embedding_model", he.name),
+      Setting("embedding_dim", "8")).toDF(), dir)
+    IndexJob.withPq(IndexJob.withAnn(IndexData.load(spark, dir), dir,
+      annClusters = 2, annIters = 2), dir, pqCodes = 2)
+    val served = servingLoad(spark, dir)
+    val pinned = Seq("documents" -> served.documents, "postings" -> served.postings,
+        "termdf" -> served.termdf, "doclen" -> served.doclen, "stats" -> served.stats,
+        "settings" -> served.settings) ++
+      served.ann.toSeq.flatMap(a => Seq("ann centroids" -> a.centroids,
+        "ann postings" -> a.postings)) ++
+      served.pq.toSeq.flatMap(p => Seq("pq codes" -> p.codes,
+        "pq codebooks" -> p.codebooks)) ++
+      served.scoredPostings.map("impact-scored postings" -> _)
+    assert(pinned.size == 11, pinned.map(_._1))
+    assert(pinned.forall(_._2.storageLevel != StorageLevel.NONE))
+    served.uncacheAll(blocking = true)
+    val still = pinned.collect { case (n, f) if f.storageLevel != StorageLevel.NONE => n }
+    assert(still.isEmpty, s"still pinned after uncacheAll: $still")
   }
 
   test("append-merge segment: the fingerprint moves and the reloaded live " +
@@ -108,7 +142,7 @@ class ServeReloadSpec extends AnyFunSuite {
     assert(hits(holder.current, "glacier").nonEmpty)
     assert(holder.current.pendingSegments == 1)
     assert(!holder.checkAndReload())
-    holder.current.uncacheAll(); ServeSearch.releaseScored(holder.current)
+    holder.current.uncacheAll()
   }
 
   test("a settings-only rewrite (new analyzer) reloads, and the served " +
@@ -131,7 +165,7 @@ class ServeReloadSpec extends AnyFunSuite {
     assert(holder.current.setting("analyzer").contains("whitespace"))
     // the released generation keeps the snapshot it was served with
     assert(before.setting("analyzer").contains("default"))
-    holder.current.uncacheAll(); ServeSearch.releaseScored(holder.current)
+    holder.current.uncacheAll()
   }
 
   test("maybeReload honors the throttle; a negative interval disables " +
@@ -232,7 +266,7 @@ class ServeReloadSpec extends AnyFunSuite {
     assert(!holder.checkAndReload(), "post-heal: fingerprint stable " +
       "(marker gone, table stamps settled)")
     assert(hits(holder.current, "nebula") == Seq("d2"))
-    holder.current.uncacheAll(); ServeSearch.releaseScored(holder.current)
+    holder.current.uncacheAll()
   }
 
   test("MCP server rejects a search tool named like the reload tool") {
