@@ -66,53 +66,55 @@ final case class IndexData(
     // for legacy segments written before the delta layout — `--ann` search
     // then warns that sidecars cover the compacted base only
     sidecarsCoverSegments: Boolean = true,
-    // impact-scored postings (term, doc_id, s), cache-pinned — set by
-    // [[cached]]; the warm BM25 leg of [[graft.search.ServeSearch]] reads
-    // it, and None serves the cold leg. Derived from postings, termdf,
-    // doclen and stats: a copy that replaces one of those must drop it
-    scoredPostings: Option[DataFrame] = None) {
+    // the driver-resident legs of a cache-pinned instance — set by
+    // [[cached]]; [[graft.search.ServeSearch]] serves through them, and
+    // None serves the Spark legs. Built from this instance's frames: a copy
+    // that replaces one of them must drop it
+    served: Option[graft.search.ServedIndex] = None) {
 
   /** Cache the search-path datasets for a long-lived serving session
-    * (SURVEY.md §3.3), plus the impact-scored postings: `s` is the full
-    * per-(term, doc) BM25 contribution ([[Bm25.termScore]]) — tf, df, dl,
-    * N and avgdl are all static for the life of the loaded artifact — so a
-    * warm request's BM25 leg is filter(In(term,…)) → sum → top-k over this
-    * one frame, with no per-request join or broadcast at any corpus size.
-    * The frame inherits the term-clustered postings layout, so the `In`
-    * filter prunes cached batches by their stats as it prunes row groups
-    * on disk. `.cache()` is lazy: the first action (`Cli.serveReady`
-    * counts it before the first request) builds and pins it. */
-  def cached(): IndexData = copy(
-    documents = documents.cache(),
-    postings = postings.cache(),
-    termdf = termdf.cache(),
-    doclen = doclen.cache(),
-    stats = stats.cache(),
-    settings = settings.cache(),
-    ann = ann.map(_.cached()),
-    pq = pq.map(_.cached()),
-    // positions stay UNCACHED by design: the phrase probe's value is the
-    // row-group-pruned parquet scan (df-proportional reads), and pinning a
-    // Σdl-sized table for an opt-in filter would double serving memory
-    positions = positions,
-    scoredPostings = Some(impactScored.cache()))
+    * (SURVEY.md §3.3) and attach the [[graft.search.ServedIndex]] that
+    * answers a warm request's BM25 leg, vector leg and fetch from driver
+    * arrays. `.cache()` is lazy: the first action materializes each pin
+    * (`Cli.serveReady` counts the stats and builds the served BM25
+    * postings before the first request; the documents, vector and PQ
+    * arrays build on their first use). Legacy dl-less postings keep the
+    * Spark legs: their doclen join is planned by size, so the rows the
+    * served postings would collect need not come in the postings scan
+    * order the Spark leg sums in. */
+  def cached(): IndexData = {
+    val pinned = copy(
+      documents = documents.cache(),
+      postings = postings.cache(),
+      termdf = termdf.cache(),
+      doclen = doclen.cache(),
+      stats = stats.cache(),
+      settings = settings.cache(),
+      ann = ann.map(_.cached()),
+      pq = pq.map(_.cached()),
+      // positions stay UNCACHED by design: the phrase probe's value is the
+      // row-group-pruned parquet scan (df-proportional reads), and pinning
+      // a Σdl-sized table for an opt-in filter would double serving memory
+      positions = positions)
+    pinned.copy(served =
+      if (postings.columns.contains("dl")) Some(new graft.search.ServedIndex(pinned)) else None)
+  }
 
-  /** The join behind [[scoredPostings]]. No broadcast hints on the
-    * corpus-scaled sides: it runs once per loaded artifact, so the
-    * optimizer's own broadcast-vs-shuffle choice is right at every scale.
-    * dl-carrying postings (every artifact since the denormalized layout)
-    * skip the corpus-sized doclen join. */
-  private def impactScored: DataFrame = {
-    val base = postings.join(termdf, "term")
-    (if (postings.columns.contains("dl")) base else base.join(doclen, "doc_id"))
+  /** Impact-scored postings (term, doc_id, s): `s` is the full
+    * per-(term, doc) BM25 contribution ([[Bm25.termScore]]) — tf, df, dl,
+    * N and avgdl are all static for the life of the loaded artifact. The
+    * served BM25 postings collect it once. termdf and stats are broadcast
+    * as in [[Bm25.scores]], so the rows keep the postings scan's
+    * partitions and order, the order the Spark leg sums in. */
+  private[graft] def impactScored: DataFrame =
+    postings.join(broadcast(termdf), "term")
       .crossJoin(broadcast(stats))
       .select(col("term"), col("doc_id"),
         Bm25.termScore(col("tf"), col("df"), col("dl"),
           col("n_docs"), col("avgdl")).as("s"))
-  }
 
-  /** Drop every cache pin [[cached]] registered, the impact-scored
-    * postings included — the one serving teardown (reload, bench lane).
+  /** Drop every cache pin [[cached]] registered and the served arrays —
+    * the one serving teardown (reload, bench lane).
     * Unpersisting is by canonicalized plan, so this releases the executor
     * storage blocks even though [[cached]] returned copies of the frames.
     * `blocking = true` when another artifact loads right after in the same
@@ -125,7 +127,7 @@ final case class IndexData(
     ann.foreach { a => a.centroids.unpersist(blocking); a.postings.unpersist(blocking) }
     pq.foreach { p => p.codes.unpersist(blocking); p.codebooks.unpersist(blocking) }
     positions.foreach(_.unpersist(blocking))
-    scoredPostings.foreach(_.unpersist(blocking))
+    served.foreach(_.release())
   }
 
   /** The corpus stats row, collected once per instance (the

@@ -27,23 +27,26 @@ import graft.rerank.Reranker
   * (SURVEY.md §4.2: fusion re-ranks the union of two top-k lists, never the
   * corpus).
   *
-  * So a warm request in the online posture (AQE off, as `graft serve`
-  * sets it) runs three bounded Spark jobs for the exact and IVF legs and
-  * four for PQ — counts pinned by ServeJobsSpec:
+  * So a request is the driver tail over the legs of a [[ServeLegs]] seam
+  * — `bm25TopK`, `vectorTopK`, `fetch` and `allowed`:
   *
-  *   1. the BM25 leg — filter + sum + top-k over the instance's cached
-  *      impact-scored postings ([[IndexData.scoredPostings]]) — collected, and
-  *   2. the VSS leg (the same exact/IVF/PQ leg builders), collected
-  *      CONCURRENTLY with 1 (independent subtrees of the same session);
-  *      PQ is two jobs here: the ADC shortlist, then its exact rerank;
-  *   3. the candidate fetch: a pushed `doc_id IN (…)` filter over the
-  *      cached documents dataset (≤2k ids — the same candidate-set
-  *      semantics as the broadcast join it replaces), collected.
+  *   - a cache-pinned artifact ([[IndexData.cached]], what `graft serve`
+  *     loads under the cache budget) answers the BM25 leg, the exact, IVF
+  *     and PQ vector legs and the candidate fetch from its driver-resident
+  *     [[ServedIndex]]: a warm request schedules ZERO Spark jobs. The BM25
+  *     arrays build at start-up, the documents, IVF and PQ arrays on their
+  *     first use;
+  *   - a plain load (disk-backed serving above the budget, one-shot `graft
+  *     search`, the 100 TB posture) runs the [[SparkLegs]]: the BM25 leg,
+  *     the vector leg (PQ is two jobs: the ADC shortlist, then its exact
+  *     rerank) and a pushed `doc_id IN (…)` candidate fetch, each a bounded
+  *     collect, the two legs CONCURRENTLY.
   *
-  * A restriction over the positions sidecar adds its probe job plus one
-  * broadcast job per term join: +2 for a two-term `--phrase` filter, +4
-  * for a two-term `--near` request (the probe runs in the near-first BM25
-  * leg and again in the candidate restriction).
+  * ServeJobsSpec pins the counts. A restriction over the positions
+  * sidecar runs on Spark in both: its probe plus one broadcast job per
+  * term join, +2 for a two-term `--phrase` filter and +4 for a two-term
+  * `--near` request (the probe runs in the near-first BM25 leg and again
+  * in the candidate restriction).
   *
   * Fusion, path rewrite, phrase filter, rerank, threshold, sort and limit
   * then run driver-locally over the collected ≤2k candidate rows,
@@ -52,7 +55,7 @@ import graft.rerank.Reranker
   * [[AnnIndex.round6]]). At 100 TB the shape is unchanged: the legs are the
   * corpus-sized work and stay distributed; the driver tail touches only the
   * candidate set, the same rows the reference materializes into Python per
-  * query (`src/searcher.py:112-180`). The fetch leg (job 3) prunes at that
+  * query (`src/searcher.py:112-180`). The Spark fetch leg prunes at that
   * scale because the documents files are doc_id-range-clustered and sorted
   * at write ([[graft.index.IndexData.write]]): content-addressed ids are
   * uniform-random, so without that layout every file's min/max spanned the
@@ -62,10 +65,10 @@ import graft.rerank.Reranker
   * (`src/indexer.py:105-107`).
   *
   * The per-artifact serving state lives on the [[IndexData]] instance, not
-  * here: the impact-scored postings frame ([[IndexData.cached]] defines
-  * it, [[IndexData.uncacheAll]] releases it with every other pin) and the
-  * cold leg's memoized stats row and term dfs. A reloaded artifact is a
-  * new instance, so it starts with fresh state, and dropping an instance
+  * here: the served arrays ([[IndexData.cached]] attaches them,
+  * [[IndexData.uncacheAll]] releases them with every pin) and the Spark
+  * legs' memoized stats row and term dfs. A reloaded artifact is a new
+  * instance, so it starts with fresh state, and dropping an instance
   * drops its memos.
   *
   * Contract: the reranker must score each (query, text) pair independently
@@ -86,7 +89,6 @@ object ServeSearch {
       reranker: Option[Reranker] = None,
       opts: HybridSearch.Options = HybridSearch.Options()): DataFrame = {
     val spark = index.documents.sparkSession
-    import spark.implicits._
 
     HybridSearch.requireNearCoherent(opts)
     val terms = analyzer.tokenize(query)
@@ -113,43 +115,22 @@ object ServeSearch {
         "proximity-FIRST retrieval; degrading to the candidate near filter " +
         "(near docs outside the top-k legs stay unreachable)")
 
-    // ---- the two corpus-sized legs, as concurrent bounded collects ----
+    // ---- the two corpus-sized legs, concurrently ----
+    val legs = ServeLegs.of(index)
     val ftsF: Future[Seq[(String, Double)]] =
       if (terms.isEmpty) Future.successful(Seq.empty) // isin() over no terms matches nothing
       else Future {
-        // WARM (a [[IndexData.cached]] instance): filter(In(term,…)) →
-        // groupBy(doc_id).sum → TakeOrdered over the cached impact-scored
-        // postings — ONE job with ZERO per-request joins or broadcast
-        // materializations at ANY corpus size. COLD (a plain load — the
-        // one-shot request, disk-backed serving): the pushed-In postings
-        // probe reads only the query's row groups off disk, joined with
-        // the instance's memoized termdf rows and stats row; building the
-        // scored frame there would join the ENTIRE postings table. Per-row
-        // doubles are the same termScore expression over the same inputs
-        // and the aggregation topology is unchanged, so scores are
-        // bit-identical either way (ServeSearchSpec pins both).
-        val leg0 = index.scoredPostings match {
-          case Some(sp) => sp
-            .filter(col("term").isin(terms.distinct: _*))
-            .groupBy("doc_id").agg(sum(col("s")).as("score"))
-          case None => Bm25.scores(terms, index.postings,
-            index.localTermdf(terms), index.doclen, index.localStats)
-        }
         // phrase-/near-first: cut top-k over the matching docs only — the
         // same semi join the DAG path plans (ServeSearchSpec/NearRankSpec
-        // pin bit-parity); both sides are probe-sized, never corpus-sized
-        val leg =
+        // pin bit-parity); the probe is probe-sized, never corpus-sized
+        val restriction =
           if (phraseRanked)
-            leg0.join(PhraseSearch.phraseMatches(index.positions.get, terms)
-              .select("doc_id"), Seq("doc_id"), "left_semi")
+            Some(PhraseSearch.phraseMatches(index.positions.get, terms).select("doc_id"))
           else if (nearRanked)
-            leg0.join(PhraseSearch.sloppyPhraseMatches(
-                index.positions.get, opts.nearTerms, opts.nearWindow)
-              .select("doc_id"), Seq("doc_id"), "left_semi")
-          else leg0
-        Bm25.topK(leg, opts.k)
-          .select(col("doc_id"), col("score"))
-          .as[(String, Double)].collect().toSeq
+            Some(PhraseSearch.sloppyPhraseMatches(
+              index.positions.get, opts.nearTerms, opts.nearWindow).select("doc_id"))
+          else None
+        legs.bm25TopK(terms, opts.k, restriction)
       }
 
     // embed ONCE and branch on the result (HybridSearch's amortization +
@@ -157,47 +138,8 @@ object ServeSearch {
     val queryVec = embedder.map(e => e.embed(Seq(query)).head)
     val vssF: Future[Seq[(String, Double)]] = queryVec match {
       case Some(q) if !q.exists(_ != 0.0f) => Future.successful(Seq.empty)
-      case Some(qvec) => Future {
-        if (opts.annPqShortlist > 0) {
-          // PQ serving tail, bounded-job shape: the batch adcRerank
-          // broadcast-joins the shortlist back into the documents scan —
-          // an extra broadcast-exchange job wave per request. Here the
-          // ≤shortlist ADC ids are COLLECTED (job 1, TakeOrdered over the
-          // pruned codes scan) and the exact rerank runs as a pushed
-          // `doc_id IN (…)` fetch (job 2) — the same two-job shape as the
-          // candidate fetch, same rows as the broadcast join (an IN filter
-          // keeps exactly the join's matching rows; ServeSearchSpec pins
-          // bit-equality against the DAG path).
-          val pq = index.pq.getOrElse(sys.error(
-            "--ann pq requires an index built with --pq-codes (no ann_pq_codebooks in artifact)"))
-          val codes =
-            if (opts.annNprobe > 0) {
-              val ann = index.ann.getOrElse(sys.error(
-                "--ann ivf+pq requires an index built with --ann-clusters"))
-              require(pq.codes.columns.contains("cluster"),
-                "--ann ivf+pq needs an artifact whose PQ codes were built alongside the " +
-                  "IVF sidecar (cluster-partitioned ann_pq_codes); re-run index with " +
-                  "both --ann-clusters and --pq-codes")
-              val probed = ann.probe(qvec, opts.annNprobe)
-              pq.codes.filter(col("cluster").isin(probed: _*))
-            } else pq.codes
-          val shortIds = HybridSearch.adcShortlist(codes, pq, qvec, opts.annPqShortlist)
-            .select("doc_id").as[String].collect().toSeq
-          if (shortIds.isEmpty) Seq.empty
-          else HybridSearch.exactRerankByIds(index.documents, shortIds, qvec, opts.k)
-            .select(col("doc_id"), col("vss_score"))
-            .as[(String, Double)].collect().toSeq
-        } else {
-          val leg =
-            if (opts.annNprobe > 0) {
-              val ann = index.ann.getOrElse(sys.error(
-                "--ann requires an index built with --ann-clusters (no ann_centroids in artifact)"))
-              HybridSearch.vssTopKIvf(ann, qvec, opts.k, opts.annNprobe)
-            } else HybridSearch.vssTopK(index.documents, qvec, opts.k)
-          leg.select(col("doc_id"), col("vss_score"))
-            .as[(String, Double)].collect().toSeq
-        }
-      }
+      case Some(qvec) =>
+        Future(legs.vectorTopK(qvec, opts.k, (opts.annNprobe, opts.annPqShortlist)))
       case None => Future.successful(Seq.empty)
     }
     val fts = Await.result(ftsF, Duration.Inf)
@@ -240,13 +182,13 @@ object ServeSearch {
       case other => sys.error(s"unknown fusion '$other' (expected mean or rrf)")
     }
 
-    // ---- J1 candidate fetch: ONE pushed-IN scan of the cached documents ----
+    // ---- J1 candidate fetch: one `fetch` leg call ----
     // `tokens` rides along ONLY when the token-filter phrase fallback will
     // read it (phraseOnly on an artifact without the positions sidecar):
     // the column is content-sized per row — roughly doubling the fetch
     // bytes of every request — and nothing else in the tail consumes it
     // (round-16 self-hunt). Column pruning reaches the parquet scan on
-    // disk-backed artifacts and trims cache deserialization on pinned ones.
+    // disk-backed artifacts; the served arrays do not hold it at all.
     // the candidate restriction exists for docs the UNRESTRICTED legs can
     // surface: under phraseRank/nearRank the fts leg is restriction-pure
     // by construction, so when the vss leg contributed NOTHING (no
@@ -260,14 +202,9 @@ object ServeSearch {
       (opts.phraseRank && (vss.nonEmpty || !phraseRanked))) && terms.nonEmpty
     val nearFilter = nearMode && (vss.nonEmpty || !nearRanked)
     val needTokens = (phraseFilter || nearFilter) && index.positions.isEmpty
-    val fetchCols = Seq("doc_id", "file_path", "header_path", "line_start",
-      "line_end", "content") ++ (if (needTokens) Seq("tokens") else Nil)
+    val fetchCols = ServedIndex.FetchCols ++ (if (needTokens) Seq("tokens") else Nil)
     val fetched: Map[String, Row] =
-      if (ids.isEmpty) Map.empty
-      else index.documents
-        .filter(col("doc_id").isin(ids: _*))
-        .select(fetchCols.map(col): _*)
-        .collect().map(r => r.getString(0) -> r).toMap
+      if (ids.isEmpty) Map.empty else legs.fetch(ids, fetchCols)
 
     // ---- the ≤2k-row tail, driver-local ----
     final case class Hit(docId: String, filePath: String, headerPath: String,
@@ -296,10 +233,8 @@ object ServeSearch {
     def restrictCandidates(cur: Seq[Hit],
         probe: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
         localMatch: Hit => Boolean): Seq[Hit] = index.positions match {
-      case Some(pos) if cur.nonEmpty =>
-        val allowed = probe(pos.filter(col("doc_id").isin(cur.map(_.docId): _*)))
-          .select("doc_id").collect()
-          .map(r => String.valueOf(r.get(0))).toSet
+      case Some(_) if cur.nonEmpty =>
+        val allowed = legs.allowed(cur.map(_.docId), probe)
         cur.filter(h => allowed.contains(h.docId))
       case _ => cur.filter(localMatch)
     }
@@ -370,10 +305,14 @@ object ServeSearch {
       java.util.Arrays.asList(out: _*), schema)
   }
 
-  /** Drop an index's cached impact-scored frame ([[IndexData.scoredPostings]]);
-    * [[IndexData.uncacheAll]] drops it together with every other pin. */
+  /** Drop an index's served arrays ([[IndexData.served]]);
+    * [[IndexData.uncacheAll]] drops them together with every cache pin.
+    * Kept only because the benchmark's teardown calls it before
+    * `uncacheAll` (`perfbench` IndexWorkload and ServeWorkload); it has no
+    * other caller. `blocking` is unused: releasing driver arrays is
+    * immediate. */
   private[graft] def releaseScored(index: IndexData, blocking: Boolean = false): Unit =
-    index.scoredPostings.foreach(_.unpersist(blocking))
+    index.served.foreach(_.release())
 
   /** Driver replica of [[HybridSearch.rewritePath]] (same Java regexes the
     * codegen'd expressions compile, incl. the os.path.join add semantics —

@@ -40,14 +40,29 @@ object McpServer {
   def checkTopK(k: Long): Int =
     if (k < MinTopK || k > MaxTopK) throw new TopKOutOfRange(k) else k.toInt
 
+  /** A request's `top_k` that is not an integral JSON number (`2.9`,
+    * `true`, `"3"`, `[3]`, an integer past 64 bits); the search is not run. */
+  final class TopKNotInteger(raw: JsonNode) extends IllegalArgumentException(
+    s"top_k must be an integral JSON number, got $raw")
+
+  /** Decode a request's `top_k`: absent or JSON `null` means `defaultK`;
+    * an integral JSON number is range-checked ([[checkTopK]]); any other
+    * value is a [[TopKNotInteger]]. Jackson's `asLong` would instead
+    * truncate `2.9` to 2, read `true` as 1, fall back to the default for
+    * `"abc"` or `[3]` and wrap 2^64+5 to 5. */
+  def topKOf(node: JsonNode, defaultK: Int): Int =
+    if (node == null || node.isNull) defaultK
+    else if (node.isIntegralNumber && node.canConvertToLong) checkTopK(node.longValue)
+    else throw new TopKNotInteger(node)
+
   private val mapper = new ObjectMapper()
 
   /** Decode one `--protocol jsonl` request line, `{"query": "...",
     * "top_k": N}`, into (query, top_k) with a JSON parser, so a query sent
     * as backslash-u escapes reaches the analyzer as the text it encodes.
-    * `top_k` defaults to `defaultK` and is range-checked. Throws on a
-    * malformed line or a missing query; the serve loop answers those with
-    * `{"error": ...}`. */
+    * `query` must be a JSON string; `top_k` is decoded by [[topKOf]].
+    * Throws on a malformed line, a missing or non-string query or a bad
+    * `top_k`; the serve loop answers those with `{"error": ...}`. */
   def parseJsonlRequest(line: String, defaultK: Int): (String, Int) = {
     val msg =
       try mapper.readTree(line)
@@ -56,7 +71,7 @@ object McpServer {
       }
     val query = Option(msg.get("query")).filter(_.isTextual).map(_.asText())
       .getOrElse(throw new IllegalArgumentException("missing \"query\""))
-    (query, checkTopK(Option(msg.get("top_k")).map(_.asLong(defaultK)).getOrElse(defaultK.toLong)))
+    (query, topKOf(msg.get("top_k"), defaultK))
   }
 }
 
@@ -82,7 +97,7 @@ final class McpServer(
   private val f = JsonNodeFactory.instance
 
   import McpServer.{MaxTopK, MinTopK, ProtocolVersion, SupportedProtocolVersions,
-    checkTopK, mapper}
+    mapper, topKOf}
 
   private def resp(id: JsonNode): ObjectNode = {
     val o = f.objectNode()
@@ -201,16 +216,16 @@ final class McpServer(
           Some(error(id, -32602, s"unknown tool: $name"))
         else {
           val args = Option(params.get("arguments")).getOrElse(f.objectNode())
-          Option(args.get("query")).map(_.asText()) match {
+          Option(args.get("query")) match {
             case None => Some(error(id, -32602, "missing required argument: query"))
-            case Some(query) =>
-              val topK = Option(args.get("top_k")).map(_.asLong(defaultTopK))
-                .getOrElse(defaultTopK.toLong)
+            case Some(q) if !q.isTextual =>
+              Some(error(id, -32602, s"argument query must be a JSON string, got $q"))
+            case Some(q) =>
               val o = resp(id)
               val r = o.putObject("result")
               val content = r.putArray("content")
               try {
-                val resultsJson = searchFn(query, checkTopK(topK))
+                val resultsJson = searchFn(q.asText(), topKOf(args.get("top_k"), defaultTopK))
                 val c = content.addObject()
                 c.put("type", "text")
                 c.put("text", resultsJson)

@@ -17,8 +17,9 @@ import graft.index.IndexData
   * fresh serving-ready load:
   *
   *   1. release the OLD generation first — [[IndexData.uncacheAll]]
-  *      (every cache pin, the impact-scored postings included; the
-  *      instance's memos go with the instance), BLOCKING: async
+  *      (every cache pin, and the driver arrays of its
+  *      [[graft.search.ServedIndex]]; the instance's memos go with the
+  *      instance), BLOCKING: async
   *      eviction races the next generation's cache materialization and
   *      thrashes storage memory (measured 5-10× on StartupProbe reload
   *      trials at 500k docs). Release-BEFORE-load is also a correctness
@@ -97,15 +98,20 @@ final class ServingIndex private (
 
 object ServingIndex {
 
-  /** Default auto-check throttle; `spark.graft.serve.reloadCheckIntervalMs`
-    * overrides (0 = check every request, negative = manual `reload_index`
-    * tool only). */
+  /** Default auto-check throttle; [[CheckIntervalKey]] overrides (0 =
+    * check every request, negative = manual `reload_index` tool only). */
   val DefaultCheckIntervalMs: Long = 10000L
 
+  val CheckIntervalKey = "spark.graft.serve.reloadCheckIntervalMs"
+
+  /** The configured check interval. A value that is not an integer fails,
+    * naming the key and the value — a typo would otherwise serve with the
+    * 10 s default the operator meant to change. */
   def checkIntervalOf(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.serve.reloadCheckIntervalMs")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(DefaultCheckIntervalMs)
+    spark.conf.getOption(CheckIntervalKey).fold(DefaultCheckIntervalMs) { v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$CheckIntervalKey must be an integer number of milliseconds, got '$v'"))
+    }
 
   /** Open a serving handle: fingerprint FIRST, then the initial load —
     * a write committing between the two is caught by the first check (the

@@ -357,7 +357,7 @@ class CliInteractiveSpec extends AnyFunSuite {
       "explicit flag always wins") {
     val budget = 1000L
     val fits = budget / Cli.ServeCacheInflation
-    // fits (×inflation, covering columnar batches + the scored frame): cache
+    // fits (×inflation, covering the cache pins + the served arrays): cache
     assert(Cli.shouldCacheForServing(fits, budget, None))
     // exceeds: disk-backed serving
     assert(!Cli.shouldCacheForServing(fits + 1, budget, None))

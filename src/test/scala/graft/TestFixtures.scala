@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 object TestFixtures {
 
   /** An artifact loaded the way `graft serve --cache` loads it: cache pins
-    * plus the impact-scored postings frame, built before the first request. */
+    * plus the served BM25 postings, built before the first request. */
   def servingLoad(spark: SparkSession, dir: String): graft.index.IndexData =
     Cli.serveReady(spark, dir, Some(true))
 

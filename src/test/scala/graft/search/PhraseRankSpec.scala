@@ -75,11 +75,16 @@ class PhraseRankSpec extends AnyFunSuite {
       "(bit-identical rows)") {
     val index = IndexData.load(spark, artifactDir)
     val an = graft.analyze.WhitespaceAnalyzer
-    val serve = ServeSearch.search(index, "table value", analyzer = an,
-      opts = opts(rank = true)).collect().map(_.toSeq).toSeq
     val dag = HybridSearch.search(index, "table value", analyzer = an,
       opts = opts(rank = true)).collect().map(_.toSeq).toSeq
-    assert(serve == dag, s"serve=$serve\ndag=$dag")
+    // on the Spark legs of a plain load and on the driver-resident legs of
+    // a cache-pinned one (released after, so later specs read from disk)
+    val warm = IndexData.load(spark, artifactDir).cached()
+    try Seq("cold" -> index, "cached" -> warm).foreach { case (leg, served) =>
+      val serve = ServeSearch.search(served, "table value", analyzer = an,
+        opts = opts(rank = true)).collect().map(_.toSeq).toSeq
+      assert(serve == dag, s"$leg: serve=$serve\ndag=$dag")
+    } finally warm.uncacheAll(blocking = true)
   }
 
   test("--phrase-rank adds only a PROBE-SIZED delta over the plain BM25 " +

@@ -13,8 +13,8 @@ import graft.rerank.TokenOverlapReranker
   * (query, options) cell here must produce BIT-IDENTICAL rows and columns
   * to HybridSearch.search — including the degradation contracts (zero-norm
   * query, NaN doc embedding, absent legs) and every ANN mode — on both
-  * BM25 legs: the cold one of a plain load and the warm impact-scored one
-  * of a `cached()` instance. */
+  * sets of legs: the Spark legs of a plain load and the driver-resident
+  * `ServedIndex` of a `cached()` instance. */
 class ServeSearchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -58,8 +58,8 @@ class ServeSearchSpec extends AnyFunSuite {
     tmp
   }
 
-  /** The warm instance (`cached()`: impact-scored BM25 leg) and a plain
-    * load of the same artifact (cold BM25 leg). */
+  /** The warm instance (`cached()`: driver-resident legs) and a plain
+    * load of the same artifact (Spark legs). */
   private lazy val idx: IndexData = IndexData.load(spark, dir).cached()
   private lazy val cold: IndexData = IndexData.load(spark, dir)
   private def legs: Seq[(String, IndexData)] = Seq("cold" -> cold, "warm" -> idx)
@@ -270,18 +270,19 @@ class ServeSearchSpec extends AnyFunSuite {
     parity("cold-live", IndexData.load(spark, idxDir), "spark joins")
     val live = IndexData.load(spark, idxDir).cached()
     try {
-      parity("warm-live", live, "spark joins") // impact postings over the live view
+      parity("warm-live", live, "spark joins") // served arrays over the live view
       parity("warm-live-2", live, "dense scores fuse")
     } finally live.uncacheAll()
   }
 
   test("WARM impact-postings leg is bit-identical too (the `graft serve` path)") {
-    // a cached() instance serves the BM25 leg from the precomputed
-    // impact-scored postings frame instead of the per-request three-way
-    // join — same termScore doubles, same aggregation topology, so parity
-    // must hold across fusion modes, ANN modes and degradations
-    assert(idx.scoredPostings.isDefined, "cached() defines the impact-scored frame")
-    assert(cold.scoredPostings.isEmpty, "a plain load serves the cold leg")
+    // a cached() instance serves the BM25 leg from the driver-resident
+    // impact-scored postings instead of the per-request three-way join —
+    // same termScore doubles summed in the order Spark's aggregation meets
+    // them, so parity must hold across fusion modes, ANN modes and
+    // degradations
+    assert(idx.served.isDefined, "cached() attaches the served legs")
+    assert(cold.served.isEmpty, "a plain load serves the Spark legs")
     val warm = Seq("warm" -> idx)
     assertParity("warm-default", "spark joins tables", on = warm)
     assertParity("warm-rrf", "fast merge windows",

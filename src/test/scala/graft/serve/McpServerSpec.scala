@@ -64,6 +64,14 @@ class McpServerSpec extends AnyFunSuite {
     val noQuery = stub.handle(
       """{"jsonrpc":"2.0","id":5,"method":"tools/call","params":{"name":"search_documents","arguments":{}}}""").get
     assert(noQuery.contains(""""code":-32602"""), noQuery)
+    // a query that is not a JSON string is an invalid argument, not a
+    // search for "" (or for the text "null")
+    for (q <- Seq("{}", """["a"]""", "null", "7", "true")) {
+      val bad = stub.handle(
+        s"""{"jsonrpc":"2.0","id":5,"method":"tools/call","params":{"name":"search_documents","arguments":{"query":$q}}}""").get
+      assert(bad.contains(""""code":-32602""") && bad.contains("query must be a JSON string"), bad)
+      assert(!bad.contains("d-"), bad)
+    }
 
     val unknown = stub.handle("""{"jsonrpc":"2.0","id":6,"method":"bogus/method"}""").get
     assert(unknown.contains(""""code":-32601"""), unknown)
@@ -100,7 +108,21 @@ class McpServerSpec extends AnyFunSuite {
       assert(r.contains(""""isError":true"""), r)
       assert(r.contains(s"top_k must be between 1 and 100, got $k"), r)
     }
+    // anything but an integral JSON number is a named error too — never
+    // truncated (2.9), coerced (true), defaulted ("abc", [3]) or wrapped
+    // (2^64+5)
+    for (k <- Seq("2.9", "true", "\"abc\"", "\"3\"", "[3]", "{}", "18446744073709551621")) {
+      val r = counting.handle(
+        s"""{"jsonrpc":"2.0","id":1,"method":"tools/call","params":{"name":"t","arguments":{"query":"x","top_k":$k}}}""").get
+      assert(r.contains(""""isError":true"""), r)
+      assert(r.contains("top_k must be an integral JSON number"), r)
+    }
     assert(searches == 0)
+    // JSON null means the default
+    val dflt = counting.handle(
+      """{"jsonrpc":"2.0","id":2,"method":"tools/call","params":{"name":"t","arguments":{"query":"x","top_k":null}}}""").get
+    assert(dflt.contains(""""isError":false""") && dflt.contains("\\\"k\\\":5"), dflt)
+    searches = 0
     for (k <- Seq(1, 100)) {
       val r = counting.handle(
         s"""{"jsonrpc":"2.0","id":2,"method":"tools/call","params":{"name":"t","arguments":{"query":"x","top_k":$k}}}""").get
@@ -124,11 +146,22 @@ class McpServerSpec extends AnyFunSuite {
         McpServer.parseJsonlRequest(s"""{"query":"x","top_k":$k}""", 5))
       assert(e.getMessage == s"top_k must be between 1 and 100, got $k")
     }
+    for (k <- Seq("2.9", "true", "\"abc\"", "[3]", "18446744073709551621")) {
+      val e = intercept[McpServer.TopKNotInteger](
+        McpServer.parseJsonlRequest(s"""{"query":"x","top_k":$k}""", 5))
+      assert(e.getMessage.startsWith("top_k must be an integral JSON number, got "), e.getMessage)
+    }
+    assert(McpServer.parseJsonlRequest("""{"query":"x","top_k":null}""", 5) == ("x" -> 5))
     val bad = intercept[IllegalArgumentException](McpServer.parseJsonlRequest("{not json", 5))
     assert(bad.getMessage.startsWith("malformed JSON request"), bad.getMessage)
     val missing = intercept[IllegalArgumentException](
       McpServer.parseJsonlRequest("""{"top_k":3}""", 5))
     assert(missing.getMessage == "missing \"query\"")
+    for (q <- Seq("{}", """["a"]""", "null")) {
+      val e = intercept[IllegalArgumentException](
+        McpServer.parseJsonlRequest(s"""{"query":$q,"top_k":3}""", 5))
+      assert(e.getMessage == "missing \"query\"", e.getMessage)
+    }
   }
 
   test("a throwing search surfaces as isError, not a dead server") {

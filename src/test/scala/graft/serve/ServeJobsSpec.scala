@@ -10,15 +10,15 @@ import graft.index.{IndexData, IndexJob}
 import graft.util.InputMetrics
 
 /** The served request's Spark job budget, pinned as job COUNTS (never
-  * wall-clock): a warm `Cli.runSearch` over a cache-pinned artifact runs
-  * the BM25 leg, the vector leg and the candidate fetch — 3 jobs for the
-  * exact and IVF legs, 4 for PQ (codes shortlist + exact rerank of the
-  * shortlist); a positions restriction adds its probe plus one broadcast
-  * job per term join, in the candidate restriction and — near-first
-  * ranking — in the BM25 leg too. Analyzer and embedder resolution from the
+  * wall-clock): a warm `Cli.runSearch` over a cache-pinned artifact answers
+  * its BM25 leg, vector leg (exact, IVF, PQ) and candidate fetch from the
+  * instance's driver-resident `ServedIndex` — no Spark job at all. Only a
+  * positions restriction runs on Spark: its probe plus one broadcast job
+  * per term join, in the candidate restriction and — near-first ranking —
+  * in the BM25 leg too. Analyzer and embedder resolution from the
   * artifact settings must add none: the settings are a per-instance
   * snapshot and the embedder is resolved once per loaded artifact. A
-  * disk-backed (`--no-cache`) request serves the cold BM25 leg off parquet,
+  * disk-backed (`--no-cache`) request serves the Spark legs off parquet,
   * with the corpus stats row and the seen terms' dfs memoized on the
   * instance: only a term the instance has never looked up costs a job. */
 class ServeJobsSpec extends AnyFunSuite {
@@ -28,7 +28,7 @@ class ServeJobsSpec extends AnyFunSuite {
   private val dim = 8
 
   /** An on-disk artifact with IVF + PQ sidecars, loaded the way
-    * `graft serve --cache` loads it (cache pins + impact-scored postings). */
+    * `graft serve --cache` loads it (cache pins + served BM25 postings). */
   private lazy val (dir, index) = {
     val he = new HashingEmbedder(dim)
     val contents = Seq(
@@ -58,7 +58,8 @@ class ServeJobsSpec extends AnyFunSuite {
 
   /** Jobs scheduled by one request, after a warm-up request of the same
     * mode (first-touch work — settings snapshot, embedder resolution,
-    * centroid collect — is per artifact, not per request). Runs in the
+    * centroid collect, the served documents, IVF and PQ arrays — is per
+    * artifact, not per request). Runs in the
     * online posture `graft serve` sets (AQE off: under AQE the BM25 leg's
     * shuffle map stage would run as a job of its own). */
   private def jobsPerRequest(ann: (Int, Int), phrase: Boolean = false,
@@ -78,19 +79,21 @@ class ServeJobsSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
   }
 
-  test("a warm served request schedules 3 jobs for exact and IVF, 4 for PQ") {
-    assert(jobsPerRequest((0, 0)) == 3, "exact")
-    assert(jobsPerRequest((2, 0)) == 3, "ivf")
-    assert(jobsPerRequest((0, 4)) == 4, "pq")
+  test("a warm served request schedules no Spark job for exact, IVF and PQ") {
+    assert(index.served.isDefined, "a cache-pinned load is served from the driver")
+    assert(jobsPerRequest((0, 0)) == 0, "exact")
+    assert(jobsPerRequest((2, 0)) == 0, "ivf")
+    assert(jobsPerRequest((0, 4)) == 0, "pq")
+    assert(jobsPerRequest((2, 4)) == 0, "ivf+pq")
   }
 
   test("a two-term phrase filter adds 2 jobs (positions probe + the " +
       "broadcast side of its term join); a two-term near request adds 4 " +
       "(the same probe in the BM25 leg and in the candidate restriction)") {
     assert(jobsPerRequest((0, 0), phrase = true,
-      warm = "spark joins", query = "merge sorted") == 5, "exact + phrase")
+      warm = "spark joins", query = "merge sorted") == 2, "exact + phrase")
     assert(jobsPerRequest((0, 0), near = Some("merge,tables"),
-      warm = "spark joins tables", query = "fast merge tables") == 7, "exact + near")
+      warm = "spark joins tables", query = "fast merge tables") == 4, "exact + near")
   }
 
   test("disk-backed serving (--no-cache) keeps its stats rows and term dfs " +
@@ -104,7 +107,7 @@ class ServeJobsSpec extends AnyFunSuite {
       new java.io.File(diskDir))
     val disk = Cli.serveReady(spark, diskDir, Some(false))
     assert(disk.postings.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(disk.scoredPostings.isEmpty, "disk-backed serving takes the cold BM25 leg")
+    assert(disk.served.isEmpty, "disk-backed serving takes the Spark legs")
     def jobs(ann: (Int, Int), warm: String, query: String) =
       jobsPerRequest(ann, warm = warm, query = query, served = disk, db = diskDir)
     val q = "fast merge windows"
@@ -131,7 +134,7 @@ class ServeJobsSpec extends AnyFunSuite {
     val served = servingLoad(spark, db)
     assert(served.setting("embedding_model").exists(_.startsWith("tfidf-")))
     assert(jobsPerRequest((0, 0), warm = "spark tables", query = "merge windows",
-      served = served, db = db) == 3, "model load must not repeat per request")
+      served = served, db = db) == 0, "model load must not repeat per request")
     served.uncacheAll()
 
     val fs = new org.apache.hadoop.fs.Path(db)

@@ -15,7 +15,7 @@ import graft.search.ServeSearch
 /** Hot artifact reload for long-lived serving (round-14 directive 1): a
   * serving session must see committed on-disk changes — append-merge
   * segments, compactions, full rewrites — without a restart, releasing the
-  * old generation's cache pins (scored frame included) on swap, and the
+  * old generation's cache pins and served arrays on swap, and the
   * fingerprint check must be a no-op when nothing changed. */
 class ServeReloadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -56,16 +56,17 @@ class ServeReloadSpec extends AnyFunSuite {
     // That window is exactly where it matters: loading while the old caches
     // were still registered would substitute stale cached rows.
     var old: IndexData = null
-    var oldScored: org.apache.spark.sql.DataFrame = null
     var releasedInWindow = Seq.empty[StorageLevel]
+    var servedInWindow = true
     val holder = ServingIndex.open(spark, dir, () => {
-      if (old != null)
-        releasedInWindow = Seq(old.postings.storageLevel,
-          old.documents.storageLevel, oldScored.storageLevel)
+      if (old != null) {
+        releasedInWindow = Seq(old.postings.storageLevel, old.documents.storageLevel)
+        servedInWindow = old.served.get.resident
+      }
       servingLoad(spark, dir)
     })
     old = holder.current
-    oldScored = old.scoredPostings.get // the frame servingLoad cached
+    assert(old.served.exists(_.resident), "servingLoad builds the served BM25 postings")
     assert(hits(holder.current, "volcano").isEmpty)
 
     Thread.sleep(5) // commit-marker mtime granularity is ms
@@ -75,10 +76,11 @@ class ServeReloadSpec extends AnyFunSuite {
 
     assert(holder.checkAndReload(), "rewrite must be detected")
     assert(hits(holder.current, "volcano") == Seq("d2"))
-    // old generation fully released BEFORE the new load: cache pins and the
-    // impact-scored frame all read back NONE inside the window
-    assert(releasedInWindow == Seq(StorageLevel.NONE, StorageLevel.NONE, StorageLevel.NONE),
+    // old generation fully released BEFORE the new load: cache pins read
+    // back NONE and the served arrays are dropped inside the window
+    assert(releasedInWindow == Seq(StorageLevel.NONE, StorageLevel.NONE),
       s"old generation still pinned in the release window: $releasedInWindow")
+    assert(!servedInWindow, "old generation's served arrays still resident in the window")
     // and the new generation is warm (the loadFn ran, not a lazy view)
     assert(holder.current.postings.storageLevel != StorageLevel.NONE)
     assert(!holder.checkAndReload(), "second check must be a no-op")
@@ -110,13 +112,18 @@ class ServeReloadSpec extends AnyFunSuite {
       served.ann.toSeq.flatMap(a => Seq("ann centroids" -> a.centroids,
         "ann postings" -> a.postings)) ++
       served.pq.toSeq.flatMap(p => Seq("pq codes" -> p.codes,
-        "pq codebooks" -> p.codebooks)) ++
-      served.scoredPostings.map("impact-scored postings" -> _)
-    assert(pinned.size == 11, pinned.map(_._1))
+        "pq codebooks" -> p.codebooks))
+    assert(pinned.size == 10, pinned.map(_._1))
     assert(pinned.forall(_._2.storageLevel != StorageLevel.NONE))
+    // the impact-scored postings live in the served arrays now: built by
+    // the serving-ready load, and warm requests make the rest resident
+    val arrays = served.served.get
+    assert(arrays.resident)
+    ServeSearch.search(served, "spark joins", WhitespaceAnalyzer, Some(he))
     served.uncacheAll(blocking = true)
     val still = pinned.collect { case (n, f) if f.storageLevel != StorageLevel.NONE => n }
     assert(still.isEmpty, s"still pinned after uncacheAll: $still")
+    assert(!arrays.resident, "served arrays still resident after uncacheAll")
   }
 
   test("append-merge segment: the fingerprint moves and the reloaded live " +
@@ -166,6 +173,25 @@ class ServeReloadSpec extends AnyFunSuite {
     // the released generation keeps the snapshot it was served with
     assert(before.setting("analyzer").contains("default"))
     holder.current.uncacheAll()
+  }
+
+  test("a malformed reload check interval fails openServing with an error " +
+      "naming the key and the value") {
+    val dir = Files.createTempDirectory("reload-badconf").toString
+    IndexData.write(docsDf(Seq("d1" -> "spark runs fast")),
+      Seq(Setting("embedding_model", "test")).toDF(), dir)
+    val key = ServingIndex.CheckIntervalKey
+    try {
+      for (bad <- Seq("10s", "", "1.5", "ten")) {
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException](
+          graft.Cli.openServing(spark, dir, Some(false), None))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+      spark.conf.set(key, " 250 ")
+      assert(ServingIndex.checkIntervalOf(spark) == 250L)
+    } finally spark.conf.unset(key)
+    assert(ServingIndex.checkIntervalOf(spark) == ServingIndex.DefaultCheckIntervalMs)
   }
 
   test("maybeReload honors the throttle; a negative interval disables " +
