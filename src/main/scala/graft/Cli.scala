@@ -123,7 +123,7 @@ object Cli {
     * `src/cli.py:52-59` — its ProcessPoolExecutor width maps to local
     * executor threads here), resolved by [[GraftSession.cpus]]. */
   private def session(a: Array[String]): SparkSession =
-    GraftSession.create(arg(a, "--workers").map(_.toInt))
+    GraftSession.create(arg(a, "--workers").map(GraftSession.positiveInt("--workers", _)))
 
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("index")   => indexCmd(args.tail)
@@ -281,12 +281,7 @@ object Cli {
       s"""{"db": ${j(db)}, "n_docs": ${st.getAs[Long]("n_docs")}, """ +
         s""""avgdl": $avgdl, "vocab_terms": $vocab, """ +
         s""""pending_segments": ${index.pendingSegments}, """ +
-        s""""sidecars_cover_segments": ${index.sidecarsCoverSegments}, """ +
-        // layout health: whether this artifact carries the round-14 serving
-        // layouts — false on either means a pre-layout artifact that wants
-        // a one-time `graft compact` (appendMerge requires dl anyway, and
-        // the serving fetch cannot prune an unclustered documents table)
-        s""""postings_carry_dl": ${index.postings.columns.contains("dl")}, """ +
+        s""""format_version": ${IndexData.FormatVersion}, """ +
         s""""ann": ${index.ann.isDefined}, "pq": ${index.pq.isDefined}, """ +
         // drift keys hold the NUMERIC relative quantization-error growth
         // ("0.0" right after a fit); the warn flag applies the same
@@ -1090,20 +1085,6 @@ object Cli {
     if (msgs.isEmpty) None else Some(msgs.mkString("\n"))
   }
 
-  /** Append-mode segments normally carry frozen-model sidecar DELTAS, so
-    * `--ann` search covers them through the assembled live view. Only
-    * legacy segments written before the delta layout lack them — there the
-    * accelerated search serves from sidecars that cover only the compacted
-    * base. Say so instead of silently missing recent docs. */
-  private[graft] def segmentsWarning(index: IndexData, ann: (Int, Int)): Option[String] =
-    if ((ann._1 > 0 || ann._2 > 0) && index.pendingSegments > 0
-        && !index.sidecarsCoverSegments)
-      Some(s"[graft] warning: ${index.pendingSegments} append segment(s) pending — " +
-        "--ann serves from sidecars that cover only the compacted base and may " +
-        "miss recently appended docs (exact search sees them); run " +
-        "`graft compact --db <dir>` to fold the segments in.")
-    else None
-
   /** The online paths (interactive search, serve) run ≤2k-row plans over
     * cached datasets; AQE's per-stage re-planning only adds fixed latency
     * there. Batch jobs (index/curate/one-shot search over a cold session)
@@ -1196,7 +1177,6 @@ object Cli {
         val index = IndexData.load(spark, db)
         val annR = resolveAutoAnn(index, ann)
         driftWarning(index, annR).foreach(System.err.println)
-        segmentsWarning(index, annR).foreach(System.err.println)
         recallWarning(index, annR).foreach(System.err.println)
         val out = batchSearchFrame(index, db, queries, k, rerank, annR,
           fusion, threshold)
@@ -1232,7 +1212,6 @@ object Cli {
         if (ann._2 == AutoShortlist)
           shortlistWarning(annR, k).foreach(System.err.println)
         driftWarning(index, annR).foreach(System.err.println)
-        segmentsWarning(index, annR).foreach(System.err.println)
         recallWarning(index, annR).foreach(System.err.println)
         val hits = runSearch(index, db, query, k, rerank, removeP, addP, annR,
           fusion, threshold, phrase, phraseRank, nearRaw, nearWindow, snippets)
@@ -1277,7 +1256,6 @@ object Cli {
     def resolve(index: IndexData): Unit = {
       val r = resolveAutoAnn(index, defaultServeAnn(index, annArg))
       driftWarning(index, r).foreach(System.err.println)
-      segmentsWarning(index, r).foreach(System.err.println)
       recallWarning(index, r).foreach(System.err.println)
       annRef.set(r)
     }

@@ -31,9 +31,18 @@ object GraftSession {
   /** Executor threads: `workers` > `SPARK_GRAFT_CPUS` > available cores. */
   def cpus(workers: Option[Int] = None): Int = {
     workers.foreach(w => require(w >= 1, s"--workers must be >= 1, got $w"))
-    workers.orElse(sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt))
+    workers.orElse(sys.env.get("SPARK_GRAFT_CPUS").map(positiveInt("SPARK_GRAFT_CPUS", _)))
       .getOrElse(Runtime.getRuntime.availableProcessors())
   }
+
+  /** A thread count given from outside the program (`--workers`,
+    * `SPARK_GRAFT_CPUS`), trimmed; anything but a positive integer is an
+    * [[InvalidCpus]] naming where it came from. */
+  def positiveInt(source: String, raw: String): Int =
+    raw.trim.toIntOption.filter(_ >= 1).getOrElse(throw new InvalidCpus(source, raw))
+
+  final class InvalidCpus(source: String, raw: String)
+      extends IllegalArgumentException(s"$source must be a positive integer, got '$raw'")
 
   def create(workers: Option[Int] = None, logLevel: String = "WARN"): SparkSession = {
     val n = cpus(workers).toString

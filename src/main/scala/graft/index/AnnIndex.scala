@@ -14,7 +14,7 @@ import graft.ops.Similarity
   *
   * {{{
   *   <dir>/ann_centroids/  cid: int, cvec: array<float>     (K rows, tiny)
-  *   <dir>/ann_postings/   cluster=<cid>/…  doc_id, embedding
+  *   <dir>/ann_postings/   cluster=<cid>/…  doc_id, embedding, assign_dist
   * }}}
   *
   * `ann_postings` is the classic IVF inverted-list file: every vector stored
@@ -76,15 +76,9 @@ final case class AnnIndex(centroids: DataFrame, postings: DataFrame) {
     * byproduct of the assignment argmin [[AnnIndex.buildPostings]] already
     * computed, persisted as the `assign_dist` column — so the measurement
     * is a single-column parquet scan + avg, NOT a second corpus-wide
-    * join/distance pass per merge. Sidecars written before the column
-    * existed fall back to recomputing via the broadcast join. */
+    * join/distance pass per merge. */
   def meanAssignDist: Double =
-    if (postings.columns.contains("assign_dist"))
-      postings.agg(avg(col("assign_dist"))).head().getDouble(0)
-    else postings
-      .join(broadcast(centroids), col("cluster") === col("cid"))
-      .agg(avg(VectorOps.cosineDist(col("embedding"), col("cvec"))))
-      .head().getDouble(0)
+    postings.agg(avg(col("assign_dist"))).head().getDouble(0)
 
   /** Cache both datasets for a long-lived serving session. */
   def cached(): AnnIndex =

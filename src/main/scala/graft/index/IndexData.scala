@@ -6,27 +6,11 @@ import graft.search.Bm25
 
 /** The index artifact: what the reference keeps as one DuckDB file (tables +
   * FTS + HNSW indexes, reference `src/db.py:103-167`) becomes a directory of
-  * Parquet datasets (SURVEY.md §1.3):
-  *
-  * {{{
-  *   <dir>/documents/   doc_id, file_path, header_path, line_start, line_end,
-  *                      content, tokens: array<string>, embedding: array<float>
-  *   <dir>/postings/    term, doc_id, tf[, file_path]  (hash-partitioned by term)
-  *   <dir>/termdf/      term, df
-  *   <dir>/doclen/      doc_id, dl[, file_path]
-  *   <dir>/stats/       n_docs, avgdl            (single row)
-  *   <dir>/settings/    key, value               (embedding_model/_dim, …)
-  *   <dir>/positions/   doc_id, term, pos[, file_path]  (per occurrence,
-  *                      term-range-clustered — the phrase-search index)
-  *   <dir>/seg/<n>/     append-merge segments (same canonical layouts,
-  *                      termdf rows SIGNED, + dead_ids/ = masked doc_ids,
-  *                      + tombstones/ = replaced paths, + per-segment
-  *                      ann_postings/ann_pq_codes sidecar deltas)
-  * }}}
-  *
-  * The FTS inverted index is replaced by the postings/termdf/doclen/stats
-  * statistics tables (SURVEY.md §2.4); the HNSW index by brute-force top-k
-  * over `documents.embedding` (exact — SURVEY.md §2.5 V2).
+  * Parquet datasets in the one layout [[IndexData.FormatVersion]] names
+  * (SURVEY.md §1.3). The FTS inverted index is replaced by the
+  * postings/termdf/doclen/stats statistics tables (SURVEY.md §2.4); the
+  * HNSW index by brute-force top-k over `documents.embedding` (exact —
+  * SURVEY.md §2.5 V2).
   *
   * An artifact may carry APPEND-MERGE SEGMENTS (`seg/<n>/`, written by
   * `IndexJob.mergeAndWrite(mergeMode = "append")`): each is an O(delta)
@@ -53,19 +37,13 @@ final case class IndexData(
     pq: Option[PqIndex] = None,
     // positional postings sidecar (doc_id, term, pos — `positions/`,
     // term-clustered like postings): the phrase-search index path
-    // ([[graft.search.PhraseSearch]]). None on artifacts written before
-    // the layout or whose pending segments lack position deltas — the
-    // serving `--phrase` filter then falls back to the candidate token
-    // scan (same results, per-candidate cost instead of a pruned probe)
+    // ([[graft.search.PhraseSearch]]). None on artifacts built with
+    // `--positions off` — the serving `--phrase` filter then falls back to
+    // the candidate token scan (same results, per-candidate cost instead
+    // of a pruned probe)
     positions: Option[DataFrame] = None,
     // number of uncompacted append-merge segments the live view spans
     pendingSegments: Int = 0,
-    // whether every pending segment carries its frozen-model sidecar deltas
-    // (per-segment ann_postings / ann_pq_codes + dead_ids), so the
-    // assembled `ann`/`pq` above already cover the segment docs. False only
-    // for legacy segments written before the delta layout — `--ann` search
-    // then warns that sidecars cover the compacted base only
-    sidecarsCoverSegments: Boolean = true,
     // the driver-resident legs of a cache-pinned instance — set by
     // [[cached]]; [[graft.search.ServeSearch]] serves through them, and
     // None serves the Spark legs. Built from this instance's frames: a copy
@@ -78,10 +56,9 @@ final case class IndexData(
     * arrays. `.cache()` is lazy: the first action materializes each pin
     * (`Cli.serveReady` counts the stats and builds the served BM25
     * postings before the first request; the documents, vector and PQ
-    * arrays build on their first use). Legacy dl-less postings keep the
-    * Spark legs: their doclen join is planned by size, so the rows the
-    * served postings would collect need not come in the postings scan
-    * order the Spark leg sums in. */
+    * arrays build on their first use). Settings are not pinned: the copy
+    * inherits this instance's [[settingsMap]] snapshot, which [[load]]
+    * took, so serving never scans them. */
   def cached(): IndexData = {
     val pinned = copy(
       documents = documents.cache(),
@@ -89,15 +66,15 @@ final case class IndexData(
       termdf = termdf.cache(),
       doclen = doclen.cache(),
       stats = stats.cache(),
-      settings = settings.cache(),
       ann = ann.map(_.cached()),
       pq = pq.map(_.cached()),
       // positions stay UNCACHED by design: the phrase probe's value is the
       // row-group-pruned parquet scan (df-proportional reads), and pinning
       // a Σdl-sized table for an opt-in filter would double serving memory
       positions = positions)
-    pinned.copy(served =
-      if (postings.columns.contains("dl")) Some(new graft.search.ServedIndex(pinned)) else None)
+    val served = pinned.copy(served = Some(new graft.search.ServedIndex(pinned)))
+    Option(settingsSnapshot.get).foreach(served.settingsSnapshot.set)
+    served
   }
 
   /** Impact-scored postings (term, doc_id, s): `s` is the full
@@ -122,8 +99,7 @@ final case class IndexData(
     * races the next generation's cache materialization and thrashes storage
     * memory — measured 5-10× on StartupProbe reload trials at 500k docs. */
   def uncacheAll(blocking: Boolean = false): Unit = {
-    Seq(documents, postings, termdf, doclen, stats, settings)
-      .foreach(_.unpersist(blocking))
+    Seq(documents, postings, termdf, doclen, stats).foreach(_.unpersist(blocking))
     ann.foreach { a => a.centroids.unpersist(blocking); a.postings.unpersist(blocking) }
     pq.foreach { p => p.codes.unpersist(blocking); p.codebooks.unpersist(blocking) }
     positions.foreach(_.unpersist(blocking))
@@ -177,10 +153,14 @@ final case class IndexData(
     * settings frame: [[upsertSetting]] returns a `copy` (a fresh snapshot),
     * and serving swaps in a freshly loaded instance when the committed
     * fingerprint ([[IndexData.artifactVersion]], `settings/_SUCCESS`
-    * included) moves. A duplicated key keeps its FIRST row. */
-  lazy val settingsMap: Map[String, String] =
-    settings.select("key", "value").collect()
-      .reverseIterator.map(r => r.getString(0) -> r.getString(1)).toMap
+    * included) moves; [[cached]] hands its copy the snapshot [[load]] took.
+    * A duplicated key keeps its FIRST row. */
+  def settingsMap: Map[String, String] = settingsSnapshot.updateAndGet(seen =>
+    if (seen != null) seen
+    else IndexData.settingsMapOf(settings))
+
+  private val settingsSnapshot =
+    new java.util.concurrent.atomic.AtomicReference[Map[String, String]]()
 
   /** S6-style point lookup (reference `src/db.py:181-196`), served from
     * [[settingsMap]]: zero Spark jobs after the first lookup. */
@@ -206,6 +186,43 @@ object IndexData {
 
   /** Bound on [[IndexData.localTermdf]]'s per-instance memo. */
   private[graft] val TermDfMemoMax = 1 << 20
+
+  /** The on-disk layout, stamped as the `format_version` settings row by
+    * [[writeTables]] (the only artifact writer) and checked by [[load]].
+    * Format version 1 (`[x]` = optional: `file_path` when the documents
+    * carry it, `embedding` when embedded, `cluster` when PQ was fitted over
+    * IVF; positions absent under `positions=off`, ann/pq when not fitted):
+    *
+    * {{{
+    *   <dir>/documents/   doc_id, file_path, header_path, line_start, line_end,
+    *                      content, tokens[, embedding]  (doc_id-clustered)
+    *   <dir>/postings/    term, doc_id, tf, dl[, file_path]  (term-clustered)
+    *   <dir>/termdf/      term, df                           (term-clustered)
+    *   <dir>/doclen/      doc_id, dl[, file_path]
+    *   <dir>/stats/       n_docs, avgdl                      (single row)
+    *   <dir>/settings/    key, value     (format_version, embedding_model, …)
+    *   <dir>/positions/   doc_id, term, pos[, file_path]     (term-clustered)
+    *   <dir>/ann_centroids/ cid, cvec;  ann_postings/ cluster=<c>/ doc_id,
+    *                      embedding, assign_dist
+    *   <dir>/ann_pq_codebooks/ j, cid, cv;  ann_pq_codes/ [cluster=<c>/]
+    *                      doc_id, codes, err_sum
+    *   <dir>/seg/<n>/     documents, postings, doclen, termdf (SIGNED rows),
+    *                      dead_ids, tombstones (written last: the commit), and
+    *                      the positions/ann_postings/ann_pq_codes delta of
+    *                      every sidecar the base carries
+    * }}} */
+  val FormatVersion = 1
+  val FormatVersionKey = "format_version"
+
+  /** An artifact whose `format_version` row is missing or is not
+    * [[FormatVersion]]: this build does not read it. `graft compact`
+    * rewrites it in the current layout from its documents and settings. */
+  final class UnsupportedFormat(dir: String, found: Option[String])
+      extends IllegalStateException(
+        s"index at $dir has ${found.fold(s"no $FormatVersionKey")(v =>
+          s"$FormatVersionKey $v")}; this build reads $FormatVersionKey " +
+          s"$FormatVersion — run `graft compact --db $dir` to rewrite it " +
+          "in the current layout")
 
   /** THE keyed settings upsert (S5, reference `INSERT OR REPLACE`,
     * `src/db.py:170-178`): rows of `existing` whose key appears in `fresh`
@@ -298,7 +315,9 @@ object IndexData {
         .write.mode("overwrite").parquet(s"$dir/$PositionsDir")
     doclen.write.mode("overwrite").parquet(s"$dir/doclen")
     Bm25.corpusStats(doclen).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    settings.coalesce(1).write.mode("overwrite").parquet(s"$dir/settings")
+    upsertSettings(settings, spark.createDataFrame(Seq(
+        (FormatVersionKey, FormatVersion.toString))).toDF("key", "value"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/settings")
   }
 
   /** The one commit path for REWRITES of an artifact that may be live —
@@ -762,16 +781,13 @@ object IndexData {
     fs.delete(staging, true)
   }
 
-  /** Load the artifact's LIVE view. Without segments this is a plain read of
-    * the canonical datasets. With segments: base ∪ segments with a
-    * generation injected from the STORAGE LOCATION at read time (base = 0,
-    * segment n = n — no on-disk schema change), masked by the tombstone
-    * rule "a row of a replaced path is live iff its generation ≥ the latest
-    * generation that replaced the path". termdf sums base + signed segment
-    * deltas per term; stats derive from the live doclen. The mask join
-    * broadcasts the (tiny between compactions) tombstone set; consumers see
-    * canonical schemas either way. */
-  def load(spark: SparkSession, dir: String): IndexData = {
+  /** The committed live view of the artifact at `dir`, opened without the
+    * format check: the heal of a committed swap, the settings and the
+    * committed segments, and [[LiveView.live]] for any table whose rows
+    * carry `file_path`. Its documents and settings are all a rewrite
+    * (`IndexJob.compact`, the rewrite merge) reads, so a rewrite migrates
+    * an artifact of any format; [[load]] assembles the rest from it. */
+  private[graft] def liveView(spark: SparkSession, dir: String): LiveView = {
     finishCompactSwap(spark, dir) // heal a crashed compaction, if any
     // AFTER the heal: a compaction crash inside the settings swap window
     // (old settings deleted, staged rename pending) leaves exactly the
@@ -783,121 +799,111 @@ object IndexData {
     val fs = settingsPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(settingsPath))
       sys.error(s"no index at $dir (missing $dir/settings — run `graft index --db $dir` first)")
-    val segs = segments(spark, dir)
-    val settings = spark.read.parquet(s"$dir/settings")
-    // the canonical serving projection of a postings frame: (doc_id, term,
-    // tf) plus the denormalized dl when the artifact carries it (every
-    // artifact written since the dl layout; legacy ones fall back to the
-    // doclen join inside Bm25.scores)
-    def postingsView(df: DataFrame): DataFrame =
-      df.select(("doc_id" +: "term" +: "tf" +:
-        (if (df.columns.contains("dl")) Seq("dl") else Nil)).map(col): _*)
-    val fsRoot = settingsPath.getFileSystem(spark.sessionState.newHadoopConf())
-    def hasPositions(root: String): Boolean =
-      fsRoot.exists(new org.apache.hadoop.fs.Path(root, s"$PositionsDir/_SUCCESS"))
-    if (segs.isEmpty) IndexData(
-      documents = spark.read.parquet(s"$dir/documents"),
-      postings = postingsView(spark.read.parquet(s"$dir/postings")),
-      termdf = spark.read.parquet(s"$dir/termdf"),
-      doclen = spark.read.parquet(s"$dir/doclen").select("doc_id", "dl"),
-      stats = spark.read.parquet(s"$dir/stats"),
-      settings = settings,
-      ann = AnnIndex.load(spark, dir),
-      pq = PqIndex.load(spark, dir),
-      positions =
-        if (hasPositions(dir))
-          Some(spark.read.parquet(s"$dir/$PositionsDir")
-            .select("doc_id", "term", "pos"))
-        else None)
-    else {
-      // latest replacing generation per replaced path — the one mask frame
-      val tombMax = segs.map { case (n, p) =>
-          spark.read.parquet(s"$p/tombstones")
-            .select(col("file_path"), lit(n).as("_upto")) }
-        .reduce(_ unionByName _)
-        .groupBy("file_path").agg(max("_upto").as("_upto"))
-      def live(table: String): DataFrame = {
-        val all = segs.foldLeft(
-            spark.read.parquet(s"$dir/$table").withColumn("_gen", lit(0))) {
+    new LiveView(spark, dir, segments(spark, dir))
+  }
+
+  private[graft] final class LiveView(spark: SparkSession, dir: String,
+      val segs: Seq[(Int, String)]) {
+    val settings: DataFrame = spark.read.parquet(s"$dir/settings")
+
+    // latest replacing generation per replaced path — the one mask frame
+    private lazy val tombMax = segs.map { case (n, p) =>
+        spark.read.parquet(s"$p/tombstones")
+          .select(col("file_path"), lit(n).as("_upto")) }
+      .reduce(_ unionByName _)
+      .groupBy("file_path").agg(max("_upto").as("_upto"))
+
+    /** `table` as base ∪ segments with a generation injected from the
+      * STORAGE LOCATION (base = 0, segment n = n), masked by the tombstone
+      * rule "a row of a replaced path is live iff its generation ≥ the
+      * latest generation that replaced the path"; the plain base read
+      * without segments. */
+    def live(table: String): DataFrame =
+      if (segs.isEmpty) spark.read.parquet(s"$dir/$table")
+      else segs.foldLeft(
+          spark.read.parquet(s"$dir/$table").withColumn("_gen", lit(0))) {
           case (acc, (n, p)) =>
             acc.unionByName(spark.read.parquet(s"$p/$table").withColumn("_gen", lit(n)))
         }
-        all.join(broadcast(tombMax), Seq("file_path"), "left")
-          .filter(col("_upto").isNull || col("_gen") >= col("_upto"))
-          .drop("_gen", "_upto")
-      }
-      val doclenLive = live("doclen")
-      val termdf = (spark.read.parquet(s"$dir/termdf") +:
+        .join(broadcast(tombMax), Seq("file_path"), "left")
+        .filter(col("_upto").isNull || col("_gen") >= col("_upto"))
+        .drop("_gen", "_upto")
+  }
+
+  private def settingsMapOf(settings: DataFrame): Map[String, String] =
+    settings.select("key", "value").collect()
+      .reverseIterator.map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** Load the artifact's LIVE view ([[liveView]]) after checking its
+    * [[FormatVersion]] — the settings snapshot that check collects is the
+    * instance's [[IndexData.settingsMap]], so the check costs no job of
+    * its own. Without segments this is a plain read of the canonical
+    * datasets. With segments: termdf sums base + signed segment deltas per
+    * term; stats derive from the live doclen; the sidecars assemble base ∪
+    * segment deltas masked by dead doc_id. The mask joins broadcast the
+    * (tiny between compactions) tombstone and dead-id sets; consumers see
+    * canonical schemas either way. */
+  def load(spark: SparkSession, dir: String): IndexData = {
+    val view = liveView(spark, dir)
+    val settingsMap = settingsMapOf(view.settings)
+    val found = settingsMap.get(FormatVersionKey)
+    if (!found.contains(FormatVersion.toString)) throw new UnsupportedFormat(dir, found)
+    val segs = view.segs
+    val doclen = view.live("doclen")
+    val termdf =
+      if (segs.isEmpty) spark.read.parquet(s"$dir/termdf")
+      else (spark.read.parquet(s"$dir/termdf") +:
           segs.map { case (_, p) => spark.read.parquet(s"$p/termdf") })
         .reduce(_ unionByName _)
         .groupBy("term").agg(sum("df").cast("long").as("df"))
         .filter(col("df") > 0)
-
-      // Sidecar assembly: segments written by `appendMerge` under a
-      // sidecar-bearing base carry frozen-model DELTAS (per-segment
-      // ann_postings / ann_pq_codes) plus dead_ids — the doc_ids their
-      // tombstones masked. Sidecar rows are keyed by doc_id, not file_path,
-      // so the mask here is by dead doc_id with the same generation rule
-      // ("live iff gen ≥ the latest segment that declared the id dead" —
-      // a replaced path re-indexed with IDENTICAL content reuses its
-      // doc_id, and only the generation keeps the new row alive). The
-      // cluster filter of the probed `--ann` path pushes through the union
-      // into BOTH parquet scans, so partition pruning survives assembly.
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def segHas(p: String, sub: String): Boolean =
-        fs.exists(new org.apache.hadoop.fs.Path(p, s"$sub/_SUCCESS"))
-      val allDead = segs.forall { case (_, p) => segHas(p, "dead_ids") }
-      lazy val deadMax = segs.map { case (n, p) =>
-          spark.read.parquet(s"$p/dead_ids")
-            .select(col("doc_id"), lit(n).as("_upto")) }
-        .reduce(_ unionByName _)
-        .groupBy("doc_id").agg(max("_upto").as("_upto"))
-      def liveById(base: DataFrame, sub: String): DataFrame = {
-        val all = segs.foldLeft(base.withColumn("_gen", lit(0))) {
+    // Sidecar assembly: every segment written under a sidecar-bearing base
+    // carries its frozen-model DELTA (ann_postings / ann_pq_codes) plus
+    // dead_ids — the doc_ids its tombstones masked. Sidecar rows are keyed
+    // by doc_id, not file_path, so the mask here is by dead doc_id with the
+    // same generation rule ("live iff gen ≥ the latest segment that
+    // declared the id dead" — a replaced path re-indexed with IDENTICAL
+    // content reuses its doc_id, and only the generation keeps the new row
+    // alive). The cluster filter of the probed `--ann` path pushes through
+    // the union into BOTH parquet scans, so partition pruning survives.
+    lazy val deadMax = segs.map { case (n, p) =>
+        spark.read.parquet(s"$p/dead_ids")
+          .select(col("doc_id"), lit(n).as("_upto")) }
+      .reduce(_ unionByName _)
+      .groupBy("doc_id").agg(max("_upto").as("_upto"))
+    def liveById(base: DataFrame, sub: String): DataFrame =
+      if (segs.isEmpty) base
+      else segs.foldLeft(base.withColumn("_gen", lit(0))) {
           case (acc, (n, p)) =>
             acc.unionByName(
               spark.read.parquet(s"$p/$sub").withColumn("_gen", lit(n)),
               allowMissingColumns = true)
         }
-        all.join(broadcast(deadMax), Seq("doc_id"), "left")
-          .filter(col("_upto").isNull || col("_gen") >= col("_upto"))
-          .drop("_gen", "_upto")
-      }
-      val baseAnn = AnnIndex.load(spark, dir)
-      val annCovered = baseAnn.isDefined && allDead &&
-        segs.forall { case (_, p) => segHas(p, AnnIndex.PostingsDir) }
-      val basePq = PqIndex.load(spark, dir)
-      val pqCovered = basePq.isDefined && allDead &&
-        segs.forall { case (_, p) => segHas(p, PqIndex.CodesDir) }
-      IndexData(
-        documents = live("documents"),
-        postings = postingsView(live("postings")),
-        termdf = termdf,
-        doclen = doclenLive.select("doc_id", "dl"),
-        stats = Bm25.corpusStats(doclenLive),
-        settings = settings,
-        ann =
-          if (annCovered)
-            baseAnn.map(a => a.copy(postings = liveById(a.postings, AnnIndex.PostingsDir)))
-          else baseAnn,
-        pq =
-          if (pqCovered)
-            basePq.map(q => q.copy(codes = liveById(q.codes, PqIndex.CodesDir)))
-          else basePq,
-        // positions assemble through the SAME tombstone mask as the other
-        // file_path-carrying tables — but only when every pending segment
-        // wrote its position delta; a partial view would silently drop
-        // phrase matches from segment docs, so coverage gaps degrade to
-        // None (the token-filter fallback is always correct)
-        positions =
-          if (hasPositions(dir) && segs.forall { case (_, p) => hasPositions(p) })
-            Some(live(PositionsDir).select("doc_id", "term", "pos"))
-          else None,
-        pendingSegments = segs.size,
-        sidecarsCoverSegments =
-          (baseAnn.isEmpty || annCovered) && (basePq.isEmpty || pqCovered))
-    }
+        .join(broadcast(deadMax), Seq("doc_id"), "left")
+        .filter(col("_upto").isNull || col("_gen") >= col("_upto"))
+        .drop("_gen", "_upto")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val data = IndexData(
+      documents = view.live("documents"),
+      postings = view.live("postings").select("doc_id", "term", "tf", "dl"),
+      termdf = termdf,
+      doclen = doclen.select("doc_id", "dl"),
+      stats =
+        if (segs.isEmpty) spark.read.parquet(s"$dir/stats") else Bm25.corpusStats(doclen),
+      settings = view.settings,
+      ann = AnnIndex.load(spark, dir)
+        .map(a => a.copy(postings = liveById(a.postings, AnnIndex.PostingsDir))),
+      pq = PqIndex.load(spark, dir)
+        .map(q => q.copy(codes = liveById(q.codes, PqIndex.CodesDir))),
+      // every pending segment carries a positions delta whenever the base
+      // has the sidecar (the append merge writes one under that rule)
+      positions =
+        if (!fs.exists(new org.apache.hadoop.fs.Path(dir, s"$PositionsDir/_SUCCESS"))) None
+        else Some(view.live(PositionsDir).select("doc_id", "term", "pos")),
+      pendingSegments = segs.size)
+    data.settingsSnapshot.set(settingsMap)
+    data
   }
 
   /** Derive the full artifact from a `documents` DataFrame that already has

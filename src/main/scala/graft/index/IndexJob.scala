@@ -332,8 +332,9 @@ object IndexJob {
       else {
         // the LIVE view, not the raw base: a rewrite-mode merge over an
         // artifact carrying append segments must fold the segment docs in,
-        // not silently drop them
-        val existing = IndexData.load(spark, indexDir).documents
+        // not silently drop them. Documents only, so the rewrite also
+        // migrates an artifact of an older format
+        val existing = IndexData.liveView(spark, indexDir).live("documents")
         val freshPaths = fresh.select("file_path").distinct()
         existing.join(freshPaths, Seq("file_path"), "left_anti")
           .unionByName(fresh)
@@ -395,7 +396,10 @@ object IndexJob {
     * appended docs immediately. All O(delta): assignment/encode touch only
     * the batch. The drift metrics update after the commit from the
     * assembled view's persisted byproduct columns (`assign_dist` /
-    * `err_sum`) — a narrow column scan, never a re-assignment pass. */
+    * `err_sum`) — a narrow column scan, never a re-assignment pass.
+    *
+    * Refuses an artifact of another format ([[IndexData.UnsupportedFormat]])
+    * before it writes anything. */
   /** Incremental-merge analyzer guard: the artifact's tokens were produced
     * by ONE analyzer (the `analyzer` settings row — including any
     * `norm:<form>:` normalization layer), and a merge that tokenized its
@@ -428,18 +432,15 @@ object IndexJob {
       fresh: DataFrame,
       settings: DataFrame,
       indexDir: String): IndexData = {
+    // pre-merge live view, format-checked before anything is written —
+    // segments() can't see this merge's segment until its tombstones, the
+    // commit marker, exist at the end
+    val pre = IndexData.load(spark, indexDir)
     requireAnalyzerConsistent(spark, indexDir, settings)
-    val basePostings = spark.read.parquet(s"$indexDir/postings")
-    require(basePostings.columns.contains("file_path"),
-      s"append merge needs a base whose stats rows carry file_path; " +
-        s"this artifact predates that layout — run a one-time compaction " +
-        s"(graft compact --db $indexDir) first")
-    // same migration gate for the dl-denormalized postings layout: base and
-    // segment postings must agree on schema (the live view unions them)
-    require(basePostings.columns.contains("dl"),
-      s"append merge needs a base whose postings carry the denormalized dl " +
-        s"column; this artifact predates that layout — run a one-time " +
-        s"compaction (graft compact --db $indexDir) first")
+    require(spark.read.parquet(s"$indexDir/postings").columns.contains("file_path"),
+      s"append merge needs a base whose stats rows carry file_path (documents " +
+        s"built without it cannot be masked by path); rebuild the artifact " +
+        s"from documents that carry file_path")
     // positions policy vs layout: an O(delta) append can only EXTEND an
     // existing positions sidecar (the delta gate below keys on the base
     // dir) — it cannot create the O(corpus) base sidecar. An explicit
@@ -472,9 +473,6 @@ object IndexJob {
     // Floor of 1 part: see [[IndexData.writeDocsClustered]]
     val segParts = IndexData.writeDocsClustered(fresh, segDir, minParts = 1)
     val segDocs = spark.read.parquet(s"$segDir/documents")
-    // pre-merge live view — segments() can't see this segment yet (its
-    // tombstones, the commit marker, don't exist until the end)
-    val pre = IndexData.load(spark, indexDir)
     val replaced = pre.documents.select("file_path").distinct()
       .join(segDocs.select("file_path").distinct(), Seq("file_path"))
       // bounded by the batch's path count; used twice (dead-stats subtract
@@ -487,14 +485,14 @@ object IndexJob {
     // the base: sort within files by term so the pushed In(term, …) filter
     // prunes their row groups too (base layout: IndexData.write). withDl —
     // the live view unions base and segment postings, so the schemas must
-    // agree (gated above for legacy bases)
+    // agree
     Bm25.postings(segDocs, carry = carry, withDl = true)
       .sortWithinPartitions("term", "doc_id")
       .write.mode("overwrite").parquet(s"$segDir/postings")
     // positional sidecar delta: when the base carries positions/, each
-    // segment must too, or [[IndexData.load]] degrades the assembled view
-    // to None (a partial positional index would silently drop phrase
-    // matches from segment docs). An opt-out base (`--positions off`) has
+    // segment must too — [[IndexData.load]] unions every segment's delta
+    // (a partial positional index would silently drop phrase matches from
+    // segment docs). An opt-out base (`--positions off`) has
     // no positions/ dir, so segments stay opt-out for free. O(delta) like
     // the other per-segment tables. Layout: term-RANGE partitioned at the
     // segment's size-based part count, term-sorted within files — small
@@ -558,9 +556,7 @@ object IndexJob {
     // data, refreshed by the next merge). Reads the persisted byproduct
     // columns only — a narrow column scan of base+segments, no second
     // assignment/encode pass.
-    val after = IndexData.load(spark, indexDir)
-    if (!after.sidecarsCoverSegments) after
-    else updateDriftSettings(spark, indexDir, after)
+    updateDriftSettings(spark, indexDir, IndexData.load(spark, indexDir))
   }
 
   /** Refresh the ann/pq drift metrics from the artifact's current
@@ -578,8 +574,7 @@ object IndexJob {
         AnnIndex.MeanDistKey -> cur.toString,
         AnnIndex.DriftKey -> AnnIndex.driftOf(fit, cur).toString)
     }
-    val pqKvs = data.pq.toSeq
-      .flatMap(pq => PqIndex.meanCodesError(pq.codes)).flatMap { cur =>
+    val pqKvs = data.pq.toSeq.map(pq => PqIndex.meanCodesError(pq.codes)).flatMap { cur =>
         val fit = data.setting(PqIndex.FitMeanErrKey).map(_.toDouble).getOrElse(cur)
         Seq(
           PqIndex.FitMeanErrKey -> fit.toString,
@@ -599,14 +594,16 @@ object IndexJob {
     * ANN/PQ sidecars over the compacted corpus under the standard
     * frozen-model incremental contract (drift measured, like any merge).
     * O(corpus) by design — that is the LSM bargain: many O(delta) merges,
-    * one periodic fold. Also serves as the one-time migration that gives a
-    * pre-append-layout artifact the `file_path`-carrying stats rows. */
+    * one periodic fold. It reads only the live documents and settings
+    * ([[IndexData.liveView]]) and writes every table and sidecar anew, so it
+    * is also the one-step migration of an artifact of an older format. */
   def compact(spark: SparkSession, indexDir: String,
       layout: String = "none", layoutFiles: Int = 8): IndexData = {
-    val live = IndexData.load(spark, indexDir)
+    val live = IndexData.liveView(spark, indexDir)
     val docs =
-      if (layout == "none") live.documents
-      else graft.ops.Layout.cluster(live.documents, layout, "file_path", "line_start", layoutFiles)
+      if (layout == "none") live.live("documents")
+      else graft.ops.Layout.cluster(live.live("documents"), layout, "file_path",
+        "line_start", layoutFiles)
     // the live lineage reads base + segments and writes into the staging
     // dir, so there is no read-before-overwrite hazard. refreshSidecars:
     // the ann/pq sidecars are rebuilt over the folded corpus under the
@@ -627,6 +624,7 @@ object IndexJob {
   def withPq(written: IndexData, indexDir: String, pqCodes: Int,
       pqIters: Int = 3, refit: Boolean = false): IndexData = {
     val spark = written.documents.sparkSession
+    if (written.pq.isDefined || pqCodes > 0) requireCompacted(written, indexDir)
     written.pq match {
       case Some(existing) if refit =>
         // `--refit-pq`: drop the frozen codebooks, re-fit in place (K
@@ -659,9 +657,7 @@ object IndexJob {
         // pass just written (codes.err_sum), so the measurement is a column
         // scan of the new codes parquet — never a second encode pass
         val reloaded = PqIndex.load(spark, indexDir)
-        val cur = reloaded.flatMap(p => PqIndex.meanCodesError(p.codes))
-          .getOrElse(PqIndex.meanAssignError(
-            written.documents, "doc_id", "embedding", books))
+        val cur = reloaded.map(p => PqIndex.meanCodesError(p.codes)).getOrElse(0.0)
         val fit = written.setting(PqIndex.FitMeanErrKey)
           .map(_.toDouble).getOrElse(cur)
         val settings = upsertSettingsOnDisk(spark, indexDir, Seq(
@@ -683,12 +679,10 @@ object IndexJob {
     * plus the measured shortlist→recall curve ([[PqIndex.recallCurve]]),
     * so every fitted PQ sidecar ships its own `pq:auto` dial in settings,
     * symmetric with the IVF curve ([[persistFitBaseline]]). Reads the
-    * error off the just-written codes (`err_sum` column scan); recomputes
-    * only for pre-column artifacts. */
+    * error off the just-written codes (`err_sum` column scan). */
   private def persistPqBaseline(spark: SparkSession, indexDir: String,
       pq: PqIndex, documents: DataFrame): DataFrame = {
-    val fit = PqIndex.meanCodesError(pq.codes).getOrElse(
-      PqIndex.meanAssignError(documents, "doc_id", "embedding", pq.codebooks))
+    val fit = PqIndex.meanCodesError(pq.codes)
     val curve = PqIndex.recallCurve(pq, documents, "doc_id", "embedding")
     upsertSettingsOnDisk(spark, indexDir, Seq(
       PqIndex.FitMeanErrKey -> fit.toString,
@@ -722,6 +716,7 @@ object IndexJob {
   def withAnn(written: IndexData, indexDir: String, annClusters: Int,
       annIters: Int = 4, refit: Boolean = false): IndexData = {
     val spark = written.documents.sparkSession
+    if (written.ann.isDefined || annClusters > 0) requireCompacted(written, indexDir)
     written.ann match {
       case Some(existing) if refit =>
         val k = if (annClusters > 0) annClusters else existing.numClusters
@@ -759,6 +754,17 @@ object IndexJob {
       case None => written
     }
   }
+
+  /** A base sidecar written over an artifact with pending append segments
+    * would cover the segment docs twice once [[IndexData.load]] unions the
+    * segments' own deltas. */
+  final class PendingSegments(indexDir: String, n: Int) extends IllegalStateException(
+    s"sidecar fit over $indexDir needs a compacted artifact; it has $n pending " +
+      s"append segment(s) — run `graft compact --db $indexDir` first")
+
+  private def requireCompacted(written: IndexData, indexDir: String): Unit =
+    if (written.pendingSegments > 0)
+      throw new PendingSegments(indexDir, written.pendingSegments)
 
   /** Persist the fit-time drift baseline for a freshly-fit sidecar:
     * fit = current by definition, drift = 0 — plus the measured sample

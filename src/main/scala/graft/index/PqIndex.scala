@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * {{{
   *   <dir>/ann_pq_codebooks/  j: long, cid: int, cv: array<float>   (m×K, tiny)
-  *   <dir>/ann_pq_codes/      doc_id, codes: array<int>             (m ints/doc)
+  *   <dir>/ann_pq_codes/      doc_id, codes: array<int>, err_sum    (m ints/doc)
   * }}}
   *
   * m = ceil(dim/8) subspaces (a dim not divisible by 8 gets a narrower
@@ -304,21 +304,16 @@ object PqIndex {
     * `err_sum` column the codes dataset carries — sum of per-doc error sums
     * over the total subspace count, identical by algebra to
     * [[meanAssignError]]'s avg over assignment rows, at the cost of a
-    * two-column scan of the (already tiny) codes parquet. `None` for codes
-    * written before the column existed (callers fall back to the
-    * recomputing [[meanAssignError]]). */
-  def meanCodesError(codes: DataFrame): Option[Double] =
-    if (!codes.columns.contains("err_sum")) None
-    else Some(codes.agg(sum(col("err_sum")) / sum(size(col("codes"))))
-      .head().getDouble(0))
+    * two-column scan of the (already tiny) codes parquet. */
+  def meanCodesError(codes: DataFrame): Double =
+    codes.agg(sum(col("err_sum")) / sum(size(col("codes")))).head().getDouble(0)
 
   /** Mean assignment (reconstruction) error of the corpus under the given
     * codebooks: avg over (vector, subspace) of the L2 from the subvector to
     * its nearest codebook entry — the scalar the pq_drift staleness
     * contract tracks. One subspace explode + broadcast-argmin + avg (the
     * same pass shape encode() runs). This is the RECOMPUTING form, kept as
-    * the fallback for codes written before `err_sum` existed and as the
-    * spec's independent oracle for [[meanCodesError]]. */
+    * the spec's independent oracle for [[meanCodesError]]. */
   def meanAssignError(docs: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame): Double = {
     val sub = docs

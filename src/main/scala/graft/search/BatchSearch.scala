@@ -90,11 +90,8 @@ object BatchSearch {
     val perTermProbe = termPruned(index.postings)
       .join(broadcast(qterms), "term")
       .join(broadcast(qtermDf), "term")
-    // dl-carrying postings (artifacts since the denormalized layout) skip
-    // the corpus-sized doclen join, same as Bm25.scores
-    val perTerm = (if (index.postings.columns.contains("dl")) perTermProbe
-      else perTermProbe.join(index.doclen, "doc_id"))
-      .crossJoin(broadcast(index.stats))
+    // dl-carrying postings: no corpus-sized doclen join, same as Bm25.scores
+    val perTerm = perTermProbe.crossJoin(broadcast(index.stats))
     val ftsScores = perTerm
       .groupBy("qid", "doc_id")
       .agg(sum(Bm25.termScore($"tf", $"df", $"dl", $"n_docs", $"avgdl")).as("fts_score"))

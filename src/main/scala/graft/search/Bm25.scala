@@ -101,7 +101,8 @@ object Bm25 {
       (tf.cast("double") * lit(K1 + 1.0)) /
       (tf.cast("double") + lit(K1) * (lit(1.0) - lit(B) + lit(B) * dl.cast("double") / avgdl))
 
-  /** F4: BM25 scores of all documents matching ≥1 query term.
+  /** F4: BM25 scores of all documents matching ≥1 query term, over
+    * dl-carrying postings ([[postings]] withDl, the artifact layout).
     * Output: (doc_id, score). Only distinct query terms contribute once each
     * (bag-of-words query, matching DuckDB FTS `match_bm25` semantics).
     *
@@ -118,23 +119,16 @@ object Bm25 {
       queryTerms: Seq[String],
       postings: DataFrame,
       termdf: DataFrame,
-      doclen: DataFrame,
       stats: DataFrame): DataFrame = {
     val spark = postings.sparkSession
     import spark.implicits._
     val terms = queryTerms.distinct
-    val probe = postings
+    // the postings carry dl ([[postings]] withDl), so the probe + broadcasts
+    // are the leg's ONLY distributed work — row-group-pruned to the query's
+    // terms, corpus-flat
+    postings
       .filter(col("term").isin(terms: _*))
       .join(broadcast(termdf.filter(col("term").isin(terms: _*))), "term")
-    // dl-carrying postings ([[postings]] withDl — every artifact since the
-    // denormalized layout): no doclen join at all. The probe + broadcasts
-    // is then the leg's ONLY distributed work — row-group-pruned to the
-    // query's terms, corpus-flat. Legacy artifacts join doclen as before
-    // (bit-identical values either way; pinned in SearchSpec).
-    val withDl =
-      if (postings.columns.contains("dl")) probe
-      else probe.join(doclen, "doc_id")
-    withDl
       .crossJoin(broadcast(stats))
       .groupBy("doc_id")
       .agg(sum(termScore($"tf", $"df", $"dl", $"n_docs", $"avgdl")).as("score"))

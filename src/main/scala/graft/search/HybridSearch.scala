@@ -383,7 +383,7 @@ object HybridSearch {
     val phraseRanked = opts.phraseRank && terms.nonEmpty && index.positions.isDefined
     val nearRanked = opts.nearTerms.nonEmpty && index.positions.isDefined
     val scoresLeg = {
-      val base = Bm25.scores(terms, index.postings, index.termdf, index.doclen, index.stats)
+      val base = Bm25.scores(terms, index.postings, index.termdf, index.stats)
       if (phraseRanked)
         base.join(PhraseSearch.phraseMatches(index.positions.get, terms)
           .select("doc_id"), Seq("doc_id"), "left_semi")

@@ -50,7 +50,7 @@ final class SparkLegs(index: IndexData) extends ServeLegs {
   def bm25TopK(terms: Seq[String], k: Int,
       restriction: Option[DataFrame]): Seq[(String, Double)] = {
     val scored = Bm25.scores(terms, index.postings, index.localTermdf(terms),
-      index.doclen, index.localStats)
+      index.localStats)
     // the same semi join the DAG path plans; both sides are probe-sized
     val leg = restriction.fold(scored)(r => scored.join(r, Seq("doc_id"), "left_semi"))
     Bm25.topK(leg, k).select(col("doc_id"), col("score")).as[(String, Double)].collect().toSeq

@@ -327,26 +327,6 @@ class CliInteractiveSpec extends AnyFunSuite {
     assert(Cli.driftWarning(pqDrifted, (2, 0)).isEmpty) // ivf-only: pq not served
   }
 
-  test("segmentsWarning fires only for --ann over LEGACY uncovered segments") {
-    import spark.implicits._
-    def idx(pending: Int, covered: Boolean): IndexData =
-      IndexData.fromDocuments(
-        Seq(("d1", "a b")).toDF("doc_id", "content")
-          .withColumn("tokens", split(col("content"), " ")),
-        Seq.empty[Setting].toDF())
-        .copy(pendingSegments = pending, sidecarsCoverSegments = covered)
-    // legacy segments without sidecar deltas + an accelerated search: warn
-    val warn = Cli.segmentsWarning(idx(2, covered = false), (2, 0))
-    assert(warn.isDefined && warn.get.contains("compact"), warn)
-    assert(Cli.segmentsWarning(idx(2, covered = false), (0, 50)).isDefined)
-    // covered segments (the normal delta layout): the assembled view serves
-    // them — no warning
-    assert(Cli.segmentsWarning(idx(2, covered = true), (2, 0)).isEmpty)
-    // exact search never warns; no segments never warns
-    assert(Cli.segmentsWarning(idx(2, covered = false), (0, 0)).isEmpty)
-    assert(Cli.segmentsWarning(idx(0, covered = true), (2, 0)).isEmpty)
-  }
-
   test("layout tradeoff note fires only for SFC layouts") {
     assert(Cli.layoutTradeoffNote("none").isEmpty)
     assert(Cli.layoutTradeoffNote("zorder").exists(_.contains("doc_id")))

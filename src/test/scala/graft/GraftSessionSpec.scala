@@ -29,4 +29,17 @@ class GraftSessionSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](GraftSession.cpus(Some(0)))
     assert(e.getMessage.contains("--workers must be >= 1"))
   }
+
+  test("a thread count from outside the program must be a positive integer; " +
+      "anything else is a named error giving its source and value") {
+    // the parser alone: no session is created with these values
+    assert(GraftSession.positiveInt("SPARK_GRAFT_CPUS", " 3 ") == 3)
+    Seq("abc", "0", "-1").foreach { raw =>
+      val e = intercept[GraftSession.InvalidCpus](
+        GraftSession.positiveInt("SPARK_GRAFT_CPUS", raw))
+      assert(e.getMessage == s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'")
+    }
+    val w = intercept[GraftSession.InvalidCpus](GraftSession.positiveInt("--workers", "abc"))
+    assert(w.getMessage == "--workers must be a positive integer, got 'abc'")
+  }
 }

@@ -12,6 +12,8 @@ class SessionBuilderGuardSpec extends AnyFunSuite {
   // assembled so this file does not match itself
   private val builderCall = ("SparkSession" + """\s*\.\s*[bB]uilder""").r
   private val weakMap = ("Weak" + "HashMap").r
+  private val layoutSniff =
+    """columns\s*\.\s*contains\(\s*"(dl|assign_dist|err_sum)"\s*\)""".r
 
   private def scalaFiles(minFiles: Int, roots: String*): Seq[Path] = {
     val files = roots.flatMap { root =>
@@ -40,5 +42,14 @@ class SessionBuilderGuardSpec extends AnyFunSuite {
   test("no src/main file declares a weak-keyed map") {
     val decls = matches(scalaFiles(50, "src/main"), weakMap)
     assert(decls.isEmpty, decls.mkString("\n"))
+  }
+
+  /** The artifact format is one named decision
+    * ([[graft.index.IndexData.FormatVersion]]), checked at load: a read path
+    * that sniffs for a column the format guarantees would keep a second,
+    * older layout alive. */
+  test("no src/main file sniffs a column the artifact format guarantees") {
+    val sniffs = matches(scalaFiles(50, "src/main"), layoutSniff)
+    assert(sniffs.isEmpty, sniffs.mkString("\n"))
   }
 }

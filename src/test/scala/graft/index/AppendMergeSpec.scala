@@ -191,10 +191,13 @@ class AppendMergeSpec extends AnyFunSuite {
       opts = opts.copy(clear = false))
     val pending = IndexData.load(spark, idx)
     assert(pending.pendingSegments == 1)
+    // a base sidecar written now would cover the segment docs twice (the
+    // live view also unions the segment's delta): fits wait for compaction
+    intercept[IndexJob.PendingSegments](IndexJob.withAnn(pending, idx, annClusters = 0))
+    intercept[IndexJob.PendingSegments](IndexJob.withPq(pending, idx, pqCodes = 2))
     // the segment carried its frozen-centroid delta: the ASSEMBLED lists
     // cover every live doc, while the base sidecar files still hold only
     // the original two (O(delta) — the base was not rewritten)
-    assert(pending.sidecarsCoverSegments)
     val ann = pending.ann.getOrElse(fail("ann sidecar missing"))
     assert(ann.postings.select("doc_id").distinct().count()
       == pending.documents.count())
@@ -238,7 +241,6 @@ class AppendMergeSpec extends AnyFunSuite {
     write(delta, "c.md", "# Gamma\n\nnew appended doc about probe pruning\n")
     IndexJob.run(spark, Seq(delta), idx, embedder, opts = opts(delta, clear = false))
     val live = IndexData.load(spark, idx)
-    assert(live.sidecarsCoverSegments)
     val liveIds = live.documents.select("doc_id").collect().map(_.getString(0)).toSet
     // doc_id is path-derived, so the replaced a.md REUSES its id — the
     // generation rule (not the id alone) must keep exactly the segment's
@@ -371,11 +373,11 @@ class AppendMergeSpec extends AnyFunSuite {
     val idx = Files.createTempDirectory("appnd-legacy-idx").toString + "/idx"
     write(docs, "a.md", "# Alpha\n\nspark merges sorted runs fast\n")
     IndexJob.run(spark, Seq(docs), idx, embedder)
-    // strip file_path off the base postings — the pre-append layout
-    val legacy = spark.read.parquet(s"$idx/postings")
-      .select("doc_id", "term", "tf").localCheckpoint(true)
-    legacy.write.mode("overwrite").parquet(s"$idx/postings")
-    val e = intercept[IllegalArgumentException] {
+    // strip the format_version row — an artifact written before the stamp
+    val legacy = spark.read.parquet(s"$idx/settings")
+      .filter(col("key") =!= IndexData.FormatVersionKey).localCheckpoint(true)
+    legacy.coalesce(1).write.mode("overwrite").parquet(s"$idx/settings")
+    val e = intercept[IndexData.UnsupportedFormat] {
       IndexJob.run(spark, Seq(docs), idx, embedder,
         opts = IndexJob.Options(clear = false, mergeMode = "append"))
     }

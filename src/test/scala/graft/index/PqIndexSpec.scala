@@ -40,7 +40,6 @@ class PqIndexSpec extends AnyFunSuite {
     // column-scan form (what merges now pay) vs the recomputing encode-shaped
     // pass (the pre-column fallback and independent oracle)
     val viaColumn = PqIndex.meanCodesError(pq.codes)
-      .getOrElse(fail("err_sum present but meanCodesError empty"))
     val viaAssign = PqIndex.meanAssignError(
       index.documents, "doc_id", "embedding", pq.codebooks)
     assert(math.abs(viaColumn - viaAssign) < 1e-9, s"$viaColumn vs $viaAssign")

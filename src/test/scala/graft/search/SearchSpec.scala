@@ -26,8 +26,7 @@ class SearchSpec extends AnyFunSuite {
     Seq(Setting("embedding_model", "test")).toDF())
 
   test("BM25 matches the Okapi formula computed by hand") {
-    val scored = Bm25.scores(Seq("spark"), index.postings, index.termdf,
-      index.doclen, index.stats)
+    val scored = Bm25.scores(Seq("spark"), index.postings, index.termdf, index.stats)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     // corpus: N=4 docs, df(spark)=2, dl = [3,5,3,3], avgdl = 3.5
     val idf = math.log((4 - 2 + 0.5) / (2 + 0.5) + 1.0)
@@ -42,22 +41,28 @@ class SearchSpec extends AnyFunSuite {
       "and skip the join in the plan") {
     // the denormalized-dl layout (Bm25.postings withDl) must be a pure
     // physical change: same expression over the same size(tokens) source,
-    // so every score double is bit-equal to the legacy three-table join
-    val withDl = Bm25.scores(Seq("spark", "fast"), index.postings,
-      index.termdf, index.doclen, index.stats)
-    val legacyPostings = index.postings.drop("dl")
-    val legacy = Bm25.scores(Seq("spark", "fast"), legacyPostings,
-      index.termdf, index.doclen, index.stats)
+    // so every score double is bit-equal to the three-table join over
+    // dl-less postings, written out here as the oracle
+    val terms = Seq("spark", "fast")
+    val withDl = Bm25.scores(terms, index.postings, index.termdf, index.stats)
+    val joined = index.postings.drop("dl")
+      .filter(col("term").isin(terms: _*))
+      .join(broadcast(index.termdf.filter(col("term").isin(terms: _*))), "term")
+      .join(index.doclen, "doc_id")
+      .crossJoin(broadcast(index.stats))
+      .groupBy("doc_id")
+      .agg(sum(Bm25.termScore(col("tf"), col("df"), col("dl"),
+        col("n_docs"), col("avgdl"))).as("score"))
     val a = withDl.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val b = legacy.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(a == b, s"withDl=$a legacy=$b")
+    val b = joined.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(a == b, s"withDl=$a joined=$b")
     assert(a.keySet == Set("d1", "d3"))
-    // and the dl path genuinely dropped the doclen join: exactly one join
-    // (the broadcast termdf attach) vs the legacy plan's two
+    // and the dl path genuinely has no doclen join: exactly one join (the
+    // broadcast termdf attach) vs the oracle's two
     def joins(df: org.apache.spark.sql.DataFrame): Int =
       "Join".r.findAllIn(df.queryExecution.optimizedPlan.toString).size
-    assert(joins(withDl) < joins(legacy),
-      s"dl path joins=${joins(withDl)} legacy=${joins(legacy)}")
+    assert(joins(withDl) < joins(joined),
+      s"dl path joins=${joins(withDl)} doclen join=${joins(joined)}")
   }
 
   test("FTS probe pushes In(term) to the postings parquet scan") {
@@ -70,7 +75,7 @@ class SearchSpec extends AnyFunSuite {
     IndexData.write(index.documents, index.settings, tmp)
     val loaded = IndexData.load(spark, tmp)
     val scored = Bm25.scores(Seq("spark", "fast"), loaded.postings,
-      loaded.termdf, loaded.doclen, loaded.stats)
+      loaded.termdf, loaded.stats)
     val p = scored.queryExecution.executedPlan.toString
     val pushed = "PushedFilters: \\[[^\\]]*".r.findAllIn(p).toSeq
     assert(pushed.exists(f => f.contains("In(term, [fast,spark") ||
@@ -80,7 +85,7 @@ class SearchSpec extends AnyFunSuite {
     // in-memory stats pipeline
     val onDisk = scored.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val inMem = Bm25.scores(Seq("spark", "fast"), index.postings, index.termdf,
-      index.doclen, index.stats)
+      index.stats)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(onDisk == inMem, s"disk=$onDisk mem=$inMem")
     assert(onDisk.keySet == Set("d1", "d3"))
@@ -104,7 +109,7 @@ class SearchSpec extends AnyFunSuite {
     val live = IndexData.load(spark, tmp)
     assert(live.pendingSegments == 1)
     val scored = Bm25.scores(Seq("spark", "fast"), live.postings,
-      live.termdf, live.doclen, live.stats)
+      live.termdf, live.stats)
     val p = scored.queryExecution.executedPlan.toString
     val postingsScans = "PushedFilters: \\[[^\\]]*".r.findAllIn(p).toSeq
       .filter(f => f.contains("In(term"))

@@ -225,13 +225,6 @@ class ServeSearchSpec extends AnyFunSuite {
     assert(meta.getString(2) == "fast [c++] kernels beat jits", meta)
   }
 
-  test("dl-less postings (artifacts written before the denormalized layout) " +
-      "serve through the doclen join, bit-identical") {
-    val legacy = cold.copy(postings = cold.postings.drop("dl"))
-    assertParity("dl-less", "spark joins tables", on = Seq("cold" -> legacy),
-      dagOn = legacy)
-  }
-
   test("high threshold and small k are bit-identical") {
     assertParity("threshold", "spark joins tables",
       opts = HybridSearch.Options(scoreThreshold = 0.5))

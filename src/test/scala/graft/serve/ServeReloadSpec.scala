@@ -107,13 +107,12 @@ class ServeReloadSpec extends AnyFunSuite {
       annClusters = 2, annIters = 2), dir, pqCodes = 2)
     val served = servingLoad(spark, dir)
     val pinned = Seq("documents" -> served.documents, "postings" -> served.postings,
-        "termdf" -> served.termdf, "doclen" -> served.doclen, "stats" -> served.stats,
-        "settings" -> served.settings) ++
+        "termdf" -> served.termdf, "doclen" -> served.doclen, "stats" -> served.stats) ++
       served.ann.toSeq.flatMap(a => Seq("ann centroids" -> a.centroids,
         "ann postings" -> a.postings)) ++
       served.pq.toSeq.flatMap(p => Seq("pq codes" -> p.codes,
         "pq codebooks" -> p.codebooks))
-    assert(pinned.size == 10, pinned.map(_._1))
+    assert(pinned.size == 9, pinned.map(_._1))
     assert(pinned.forall(_._2.storageLevel != StorageLevel.NONE))
     // the impact-scored postings live in the served arrays now: built by
     // the serving-ready load, and warm requests make the rest resident
